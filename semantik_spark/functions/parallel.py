@@ -37,28 +37,37 @@ def concurrently(*thunks, max_workers: int = 4) -> list:
     output paths, no read-what-another-writes, and no crash-ordering
     contract between them (a replay-marker commit point or an
     idempotence fence like tombstones-last must stay OUTSIDE the pool,
-    sequenced after it). Exceptions propagate — the first failing
-    thunk's error is re-raised after all threads finish, so no write is
-    silently skipped. 2-4 in flight is plenty (guide §2.6); FIFO
-    scheduling gives back-fill behaviour at any cluster scale, so this
-    is placement-free — it changes WHEN jobs are submitted, never what
-    any of them computes.
+    sequenced after it). A thunk that raises an ``Exception`` does not
+    stop the others: every thunk runs to completion, then the first
+    failure is re-raised with the later failures attached as notes, so
+    no write is silently skipped and no error is dropped. A
+    ``BaseException`` (Ctrl-C, ``SystemExit``) cancels the thunks that
+    have not started and propagates at once. 2-4 in flight is plenty
+    (guide §2.6); FIFO scheduling gives back-fill behaviour at any
+    cluster scale, so this is placement-free — it changes WHEN jobs are
+    submitted, never what any of them computes.
     """
-    if len(thunks) == 1:
-        return [thunks[0]()]
-    with ThreadPoolExecutor(max_workers=min(max_workers, len(thunks))) as pool:
-        futures = [pool.submit(t) for t in thunks]
-        results, first_err = [], None
+    if len(thunks) <= 1:
+        return [t() for t in thunks]
+    pool = ThreadPoolExecutor(max_workers=min(max_workers, len(thunks)))
+    futures = [pool.submit(t) for t in thunks]
+    results, errors = [], []
+    try:
         for f in futures:
             try:
                 results.append(f.result())
-            except BaseException as e:  # noqa: BLE001 — collect, re-raise below
-                if first_err is None:
-                    first_err = e
+            except Exception as e:  # noqa: BLE001 — collect, re-raise below
+                errors.append(e)
                 results.append(None)
-        if first_err is not None:
-            raise first_err
-        return results
+    except BaseException:
+        pool.shutdown(wait=False, cancel_futures=True)
+        raise
+    pool.shutdown()
+    if errors:
+        for e in errors[1:]:
+            errors[0].add_note(f"another concurrent thunk also failed: {e!r}")
+        raise errors[0]
+    return results
 
 
 def spread(df: DataFrame, *key_cols: str) -> DataFrame:

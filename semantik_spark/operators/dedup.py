@@ -1289,7 +1289,7 @@ def semdedup(emb: DataFrame, threshold: float = 0.95, n_centroids: int = 16,
     from semantik_spark.functions.caching import cache
     from semantik_spark.functions.vectors import cosine
     from semantik_spark.operators.similarity import (
-        _codebook_df, _nearest_centroids, ivf_centroids, ivf_refine,
+        _codebook_df, assign_cells, ivf_centroids, ivf_refine,
     )
 
     v = emb.select(F.col(id_col).alias("vec_id"),
@@ -1304,11 +1304,7 @@ def semdedup(emb: DataFrame, threshold: float = 0.95, n_centroids: int = 16,
     # per-row deterministic and the duplicate test below is an exact
     # threshold + distinct — placement-free
     from semantik_spark.functions.parallel import spread
-    assigned = cache(
-        spread(v, "vec_id").crossJoin(codebook).withColumn(
-            "centroid_id", -F.array_max(_nearest_centroids("v"))["negcid"]
-        ).drop("cents")
-    )
+    assigned = cache(assign_cells(spread(v, "vec_id"), codebook, "v"))
     # cell-local duplicate test: does a smaller-id neighbor above the
     # threshold exist? (left-semi join == decorrelated EXISTS)
     removed = (

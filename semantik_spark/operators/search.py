@@ -32,24 +32,24 @@ def _topk(scored: DataFrame, k: int, score_col: str = "score") -> DataFrame:
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
+def dense_scores(index: DataFrame, queries: DataFrame,
+                 embedding_col: str = "embedding",
+                 query_vec_col: str = "query_vec") -> DataFrame:
+    """Flat dense branch: (query_id, doc_id, score = cosine) for every
+    (query, doc) pair. ``index`` carries (doc_id, embedding);
+    ``queries`` carries (query_id, query_vec). Queries are broadcast;
+    scoring is whole-stage-codegen zip_with/aggregate — no shuffle."""
+    return index.crossJoin(F.broadcast(queries)).select(
+        "query_id", "doc_id", cosine(embedding_col, query_vec_col).alias("score"),
+    )
+
+
 def dense_search(index: DataFrame, queries: DataFrame, k: int = 10,
                  embedding_col: str = "embedding",
                  query_vec_col: str = "query_vec") -> DataFrame:
-    """Brute-force exact cosine kNN: query_id, doc_id, score, rank.
-
-    ``index`` carries (doc_id, embedding); ``queries`` carries
-    (query_id, query_vec). Queries are broadcast; scoring is
-    whole-stage-codegen zip_with/aggregate — no shuffle until top-k.
-    """
-    scored = (
-        index.crossJoin(F.broadcast(queries))
-        .select(
-            "query_id",
-            "doc_id",
-            cosine(embedding_col, query_vec_col).alias("score"),
-        )
-    )
-    return _topk(scored, k)
+    """Brute-force exact cosine kNN: query_id, doc_id, score, rank —
+    dense_scores, then the per-query top-k window."""
+    return _topk(dense_scores(index, queries, embedding_col, query_vec_col), k)
 
 
 def mock_dense_search(docs: DataFrame, queries: DataFrame, k: int = 10,

@@ -6,17 +6,40 @@ persisted index, vecpipe/search/service.py:73-408). The in-one-run
 search operators (bm25.search, search.hybrid_search) rebuild the index
 per query — right for correctness oracles, wrong for latency claims.
 This module materializes the index once as parquet tables and serves
-queries against the persisted artifacts:
+queries against the persisted artifacts.
 
-  build_index   — tokenize → corpus/term stats → postings → dense
-                  embeddings, written as parquet (one pass over the
-                  corpus; the tokenized intermediate is shared).
-  bm25_serve    — encode queries against persisted terms, broadcast
-                  into the persisted postings scan, one shuffle (the
-                  per-(query,doc) sum), window top-k.
-  dense_serve   — embed queries, broadcast against the persisted
-                  embedding table, zero shuffles before top-k.
-  hybrid_serve  — RRF fusion of the two serve branches.
+Serve paths (every top-k is search._topk: per-query window, score
+DESC, doc_id ASC):
+
+  bm25_serve           BM25 branch over postings/.
+  dense_serve          flat dense branch over dense/; an optional
+                       payload predicate is pushed into the scan.
+  dense_serve_ivf      IVF dense branch over the probed cells of
+                       dense_ivf/ (same optional predicate).
+  hybrid_serve         RRF fusion of the flat dense and BM25 branches.
+  hybrid_serve_approx  RRF fusion of the IVF dense branch and the BM25
+                       branch over postings_pruned/.
+  rerank               hybrid_serve at rerank.candidate_k(k), then
+                       rerank.rerank (operators/rerank.py).
+  ivfpq_serve          IVFADC two-phase serve over ivfpq_*/.
+
+Shared stages they are composed of (one implementation each):
+
+  _bm25_scores         encode queries against terms/, score postings
+  _flat_dense_scores   embed queries, search.dense_scores over dense/
+  _ivf_dense_scores    plan probes, score the probed dense_ivf/ cells
+  _plan_probes         driver-side nprobe nearest cells per query
+  _rrf_union_fuse      single-exchange RRF fusion of two branches
+  _load_codebook       cached codebook sidecar read (serve + ivf_append)
+  _write_codebook      codebook sidecar write (both IVF builds)
+  doc_embeddings       the doc-embedding select of dense/, dense_ivf/
+                       and the streaming dense_log/
+  similarity.assign_cells  IVF cell assignment (build + append)
+  functions.publish    crash-safe bm25_state publish + replay marker
+
+Build and sync: build_index (= build_sparse + dense/), build_dense_ivf,
+build_sparse_pruned, write_ivfpq_index; merge_sparse_append,
+merge_dense_append, ivf_append, delete_from_index.
 
 Scale notes (100 TB): the persisted postings table is partitionable by
 collection and bucketable by term; the dense table by collection /
@@ -31,8 +54,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from semantik_spark.functions.vectors import mock_embedding
+from semantik_spark.functions import publish
+from semantik_spark.functions.vectors import cosine, mock_embedding
 from semantik_spark.operators import bm25, search
+from semantik_spark.operators.similarity import (
+    _codebook_df, assign_cells, ivf_centroids, ivf_refine,
+)
 from semantik_spark.plans.predicates import compile_predicate
 from semantik_spark.functions.caching import cache, checkpoint
 from semantik_spark.functions.parallel import concurrently, spread
@@ -66,22 +93,15 @@ def build_sparse(docs: DataFrame, path: str,
     terms = bm25.term_stats_from_state(tstate, stats)
     post = bm25.postings(tok, terms, stats)
 
-    # reset the mergeable stats state so a later APPEND-path
-    # merge_sparse_append continues from this exact rebuild — via the
-    # atomic whole-directory swap, never two in-place overwrites
-    def _write_state(tmp: str) -> None:
-        concurrently(
-            lambda: cstate.write.mode("overwrite").parquet(f"{tmp}/corpus"),
-            lambda: tstate.write.mode("overwrite").parquet(f"{tmp}/terms"),
-        )
-
-    # terms/, postings/ and the state swap are four independent writes
-    # over the shared cached tok/tstate (different paths, nothing reads
-    # what another writes, and a full rebuild has no inter-artifact
-    # crash-ordering contract — only the state swap itself must publish
-    # corpus+terms together, which the directory rename guarantees
-    # regardless of internal write order) — overlap them (guide §2.6;
-    # this path's jobs move KB-MB, its wall is per-job fixed cost).
+    # terms/, postings/ and the bm25_state swap (which resets the
+    # mergeable stats so a later merge_sparse_append continues from this
+    # exact rebuild) are independent writes over the shared cached
+    # tok/tstate: different paths, nothing reads what another writes —
+    # overlap them (guide §2.6; this path's jobs move KB-MB, its wall is
+    # per-job fixed cost). Recovery contract: the swap publishes
+    # corpus+terms together and carries the stream's _last_batch marker
+    # forward, but a crash can leave terms/, postings/ and bm25_state/
+    # from different generations — after a crash, rerun build_sparse.
     # the persisted postings drop term_id: appended batches are scored
     # under a GROWN vocabulary whose rank-based ids shift, so a stored
     # id column would mix id spaces across append generations — the
@@ -90,79 +110,23 @@ def build_sparse(docs: DataFrame, path: str,
         lambda: terms.write.mode("overwrite").parquet(f"{path}/terms"),
         lambda: post.drop("term_id").write.mode("overwrite")
                     .parquet(f"{path}/postings"),
-        lambda: _bm25_state_swap(path, _write_state),
+        lambda: _publish_bm25_state(path, cstate, tstate),
     )
     tok.unpersist()
 
 
-def _bm25_state_read(spark: SparkSession, path: str, sub: str):
-    """Read {path}/bm25_state/{sub} with the __old crash-window
-    fallback. Returns None ONLY when neither location exists (a
-    genuinely first batch); a read failure on an EXISTING state
-    propagates — the previous bare except treated any transient read
-    error as first-batch and silently reset the corpus-global BM25
-    stats to the latest delta batch."""
-    import os
+def _publish_bm25_state(path: str, corpus: DataFrame, terms: DataFrame,
+                        batch_id: int | None = None) -> None:
+    """Publish the mergeable BM25 stats as {path}/bm25_state/{corpus,
+    terms} in one publish.swap — a crash can never leave n_docs
+    including a batch whose df is missing."""
+    def write(tmp: str) -> None:
+        concurrently(
+            lambda: corpus.write.mode("overwrite").parquet(f"{tmp}/corpus"),
+            lambda: terms.write.mode("overwrite").parquet(f"{tmp}/terms"),
+        )
 
-    base = os.path.join(path, "bm25_state", sub)
-    old = os.path.join(path, "bm25_state__old", sub)
-    if os.path.exists(base):
-        try:
-            return spark.read.parquet(base)
-        except Exception:
-            if os.path.exists(old):
-                return spark.read.parquet(old)
-            raise
-    if os.path.exists(old):
-        return spark.read.parquet(old)
-    return None
-
-
-def _bm25_state_swap(path: str, write_fn, batch_id: int | None = None) -> None:
-    """Atomically publish a new bm25_state: ``write_fn(staging_dir)``
-    writes corpus/ and terms/ into the staging dir, then the rename
-    pair swaps the WHOLE directory in — a crash can no longer leave
-    n_docs including a batch whose df is missing (the old in-place
-    overwrites had exactly that window). ``batch_id`` writes the
-    ``_last_batch`` replay marker into the staging dir so it publishes
-    atomically with the state; non-streaming writers (exact rebuild,
-    GDPR delete) preserve the stream's existing watermark instead."""
-    import os
-    import shutil
-
-    base = os.path.join(path, "bm25_state")
-    tmp = base + "__tmp"
-    old = base + "__old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    write_fn(tmp)
-    marker = os.path.join(base, "_last_batch")
-    if batch_id is not None:
-        with open(os.path.join(tmp, "_last_batch"), "w") as fh:
-            fh.write(str(int(batch_id)))
-    elif os.path.exists(marker):
-        shutil.copy(marker, os.path.join(tmp, "_last_batch"))
-    shutil.rmtree(old, ignore_errors=True)
-    if os.path.exists(base):
-        os.rename(base, old)
-    os.rename(tmp, base)
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def _bm25_last_batch(path: str) -> int | None:
-    """The bm25_state ``_last_batch`` replay marker (with the __old
-    crash-window fallback): Structured Streaming replays a crashed
-    batch under the SAME batch_id, so ``batch_id <= marker`` means the
-    state already merged this batch — merging again would double-add
-    n_docs/sum_dl/df."""
-    import os
-
-    for base in (os.path.join(path, "bm25_state"),
-                 os.path.join(path, "bm25_state__old")):
-        f = os.path.join(base, "_last_batch")
-        if os.path.exists(f):
-            with open(f) as fh:
-                return int(fh.read().strip())
-    return None
+    publish.swap(f"{path}/bm25_state", write, batch_id)
 
 
 def merge_sparse_append(delta_docs: DataFrame, path: str,
@@ -191,13 +155,14 @@ def merge_sparse_append(delta_docs: DataFrame, path: str,
     updates must route through the exact rebuild.
     """
     spark = delta_docs.sparkSession
+    state = f"{path}/bm25_state"
     if batch_id is not None:
-        last = _bm25_last_batch(path)
+        last = publish.last_batch(state)
         if last is not None and batch_id <= last:
             return  # checkpoint replay of an already-merged batch
     tok = cache(bm25.tokenize(delta_docs, id_col=id_col, text_col=text_col))
-    old_c = _bm25_state_read(spark, path, "corpus")
-    old_t = _bm25_state_read(spark, path, "terms")
+    old_c = publish.read(spark, state, "corpus")
+    old_t = publish.read(spark, state, "terms")
     if old_c is not None and old_t is not None:
         new_c = bm25.merge_corpus_state(old_c, tok)
         new_t = bm25.merge_term_state(old_t, tok)
@@ -211,12 +176,6 @@ def merge_sparse_append(delta_docs: DataFrame, path: str,
     merged_c, merged_t = new_c, new_t
     new_c, new_t = concurrently(
         lambda: checkpoint(merged_c), lambda: checkpoint(merged_t))
-
-    def _write_state(tmp: str) -> None:
-        concurrently(
-            lambda: new_c.write.mode("overwrite").parquet(f"{tmp}/corpus"),
-            lambda: new_t.write.mode("overwrite").parquet(f"{tmp}/terms"),
-        )
 
     # postings + terms are written BEFORE the state swap: the swap
     # publishes the _last_batch replay marker, so it must be the SINGLE
@@ -252,7 +211,7 @@ def merge_sparse_append(delta_docs: DataFrame, path: str,
         _write_postings,
         lambda: terms.write.mode("overwrite").parquet(f"{path}/terms"),
     )
-    _bm25_state_swap(path, _write_state, batch_id=batch_id)
+    _publish_bm25_state(path, new_c, new_t, batch_id)
     tok.unpersist()
 
 
@@ -294,11 +253,21 @@ def merge_dense_append(delta_docs: DataFrame, path: str,
     layout's equivalent is ivf_append). Only valid for NEW ids —
     updates must route through the exact rebuild, same contract as the
     sparse append."""
-    delta_docs.select(
+    doc_embeddings(delta_docs, id_col, text_col, payload_cols) \
+        .write.mode("append").parquet(f"{path}/dense")
+
+
+def doc_embeddings(docs: DataFrame, id_col: str = "doc_id",
+                   text_col: str = "text",
+                   extra_cols: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_id, embedding, *extra_cols) — the one doc-embedding select
+    every dense artifact is written from (dense/, dense_ivf/, and the
+    streaming dense_log/), so build, append and serve embed alike."""
+    return docs.select(
         F.col(id_col).alias("doc_id"),
         mock_embedding(text_col).alias("embedding"),
-        *payload_cols,
-    ).write.mode("append").parquet(f"{path}/dense")
+        *extra_cols,
+    )
 
 
 def build_index(docs: DataFrame, path: str,
@@ -306,7 +275,7 @@ def build_index(docs: DataFrame, path: str,
                 payload_cols: tuple[str, ...] = ()) -> None:
     """Materialize the search index under ``path``: terms/, postings/,
     dense/ parquet tables. ``payload_cols`` are carried into the dense
-    table so payload-filtered serving (dense_serve_filtered) can push
+    table so payload-filtered serving (dense_serve(predicate=...)) can push
     its predicate into the parquet scan instead of joining the catalog
     per query — the reference's Qdrant payload-index trade
     (models.py:419-472 payload, dense_search.py:88-98 filters)."""
@@ -314,100 +283,83 @@ def build_index(docs: DataFrame, path: str,
     # ``docs`` writing disjoint artifact dirs — overlap them (§2.6)
     concurrently(
         lambda: build_sparse(docs, path, id_col=id_col, text_col=text_col),
-        lambda: docs.select(
-            F.col(id_col).alias("doc_id"),
-            mock_embedding(text_col).alias("embedding"),
-            *payload_cols,
-        ).write.mode("overwrite").parquet(f"{path}/dense"),
+        lambda: doc_embeddings(docs, id_col, text_col, payload_cols)
+                .write.mode("overwrite").parquet(f"{path}/dense"),
     )
+
+
+def _bm25_scores(spark: SparkSession, path: str, queries: DataFrame,
+                 postings: str = "postings") -> DataFrame:
+    """BM25 branch: (query_id, doc_id, score). Only the (tiny) query
+    encoding touches the terms table; the ``postings`` scan (postings/
+    or postings_pruned/) is the one big input and the per-(query,doc)
+    sum the one shuffle."""
+    terms = spark.read.parquet(f"{path}/terms")
+    post = spark.read.parquet(f"{path}/{postings}")
+    return bm25.score(post, bm25.encode_queries(queries, terms))
+
+
+def _flat_dense_scores(spark: SparkSession, path: str, queries: DataFrame,
+                       predicate: dict | None = None,
+                       query_id_col: str = "query_id",
+                       query_text_col: str = "query_text") -> DataFrame:
+    """Flat dense branch: embed the queries and broadcast them against
+    the persisted embedding table (search.dense_scores). A payload
+    ``predicate`` compiles to a Column (plans/predicates.py) applied to
+    the scan BEFORE scoring, so equality/range terms on payload columns
+    reach the parquet reader as PushedFilters (plan-asserted) — ranking
+    then runs on the filtered subset only, never post-filtering a top-k
+    (which under-fills k, the classic filtered-ANN bug)."""
+    index = spark.read.parquet(f"{path}/dense")
+    if predicate is not None:
+        index = index.where(compile_predicate(predicate))
+    q = queries.select(
+        F.col(query_id_col).alias("query_id"),
+        mock_embedding(query_text_col).alias("query_vec"),
+    )
+    return search.dense_scores(index, q)
 
 
 def bm25_serve(spark: SparkSession, path: str, queries: DataFrame,
                k: int = 10) -> DataFrame:
     """BM25 top-k against the persisted index: query_id, doc_id, score,
-    rank. Only the (tiny) query encoding touches the terms table; the
-    postings scan is the one big input and the per-(query,doc) sum the
-    one shuffle."""
-    terms = spark.read.parquet(f"{path}/terms")
-    post = spark.read.parquet(f"{path}/postings")
-    enc = bm25.encode_queries(queries, terms)
-    scored = bm25.score(post, enc)
-    return search._topk(scored, k)
+    rank."""
+    return search._topk(_bm25_scores(spark, path, queries), k)
 
 
 def dense_serve(spark: SparkSession, path: str, queries: DataFrame,
-                k: int = 10, query_id_col: str = "query_id",
+                k: int = 10, predicate: dict | None = None,
+                query_id_col: str = "query_id",
                 query_text_col: str = "query_text") -> DataFrame:
-    """Dense top-k against the persisted embedding table."""
-    index = spark.read.parquet(f"{path}/dense")
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        mock_embedding(query_text_col).alias("query_vec"),
-    )
-    return search.dense_search(index, q, k)
-
-
-def dense_serve_filtered(spark: SparkSession, path: str, queries: DataFrame,
-                         predicate: dict | None = None, k: int = 10,
-                         query_id_col: str = "query_id",
-                         query_text_col: str = "query_text") -> DataFrame:
-    """Payload-filtered dense top-k (F2 ∘ W2): the predicate compiles
-    to a Column (plans/predicates.py) applied to the index scan BEFORE
-    scoring, so equality/range terms on payload columns reach the
-    parquet reader as PushedFilters (plan-asserted) — candidate ranking
-    then runs on the filtered subset only, never post-filtering a
-    top-k (which under-fills k, the classic filtered-ANN bug)."""
-    index = spark.read.parquet(f"{path}/dense").where(compile_predicate(predicate))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        mock_embedding(query_text_col).alias("query_vec"),
-    )
-    return search.dense_search(index, q, k)
+    """Dense top-k against the persisted embedding table, optionally
+    payload-filtered by ``predicate`` (F2 ∘ W2, see _flat_dense_scores)."""
+    return search._topk(_flat_dense_scores(
+        spark, path, queries, predicate, query_id_col, query_text_col), k)
 
 
 def hybrid_serve(spark: SparkSession, path: str, queries: DataFrame,
                  k: int = 10, search_k: int | None = None) -> DataFrame:
     """Hybrid RRF against the persisted index — the deployed composed
-    query path (service.py:73-408 minus the per-request model calls).
-
-    SINGLE-EXCHANGE fusion (r6 latency work): instead of ranking each
-    branch in its own sort-shuffle and FULL-OUTER-joining the two
-    ranked lists (3 exchanges of scored rows), both branches' raw
-    scores union with a branch tag, ONE window ranks per (query,
-    branch), and the join becomes a groupBy pivot over the ≤
-    2·|queries|·search_k surviving rows. Row-identical to
-    rrf_fuse(dense_ranked, sparse_ranked): a (query, doc) group holds
-    exactly the branches that scored it, so the max(when(branch=…))
-    pivot reproduces the outer join's NULL pattern, and ranks/ties
-    order identically (score DESC, doc_id ASC)."""
+    query path (service.py:73-408 minus the per-request model calls):
+    the flat dense and BM25 branches through _rrf_union_fuse."""
     if search_k is None:
         search_k = max(k * 2, 20)
-    from pyspark.sql import Window
-
-    from semantik_spark.operators import bm25
-
-    index = spark.read.parquet(f"{path}/dense")
-    qd = queries.select(
-        F.col("query_id").alias("query_id"),
-        mock_embedding("query_text").alias("query_vec"),
-    )
-    from semantik_spark.functions.vectors import cosine
-
-    dscored = index.crossJoin(F.broadcast(qd)).select(
-        "query_id", "doc_id", cosine("embedding", "query_vec").alias("score")
-    )
-    terms = spark.read.parquet(f"{path}/terms")
-    post = spark.read.parquet(f"{path}/postings")
-    sscored = bm25.score(post, bm25.encode_queries(queries, terms))
-    return _rrf_union_fuse(dscored, sscored, k, search_k)
+    return _rrf_union_fuse(_flat_dense_scores(spark, path, queries),
+                           _bm25_scores(spark, path, queries), k, search_k)
 
 
 def _rrf_union_fuse(dscored: DataFrame, sscored: DataFrame,
                     k: int, search_k: int) -> DataFrame:
-    """Single-exchange RRF fusion of two raw score tables (see
-    hybrid_serve docstring): union with a branch tag, one window per
-    (query, branch), groupBy pivot — row-identical to ranking each
-    branch and full-outer-joining, at 3 exchanges fewer."""
+    """Single-exchange RRF fusion of two raw score tables (r6 latency
+    work): instead of ranking each branch in its own sort-shuffle and
+    FULL-OUTER-joining the two ranked lists (3 exchanges of scored
+    rows), both branches' raw scores union with a branch tag, ONE
+    window ranks per (query, branch), and the join becomes a groupBy
+    pivot over the ≤ 2·|queries|·search_k surviving rows. Row-identical
+    to rrf_fuse(dense_ranked, sparse_ranked): a (query, doc) group
+    holds exactly the branches that scored it, so the
+    max(when(branch=…)) pivot reproduces the outer join's NULL pattern,
+    and ranks/ties order identically (score DESC, doc_id ASC)."""
     from pyspark.sql import Window
 
     u = dscored.select(F.lit(0).alias("branch"), "query_id", "doc_id", "score") \
@@ -452,13 +404,7 @@ def build_dense_ivf(docs: DataFrame, path: str, n_centroids: int = 16,
     its cells from disk — real partition pruning, not a post-scan
     filter — which is the 100 TB difference between scanning
     nprobe/n_centroids of the corpus and scanning all of it."""
-    from semantik_spark.operators.similarity import (
-        _codebook_df, _nearest_centroids, ivf_centroids, ivf_refine,
-    )
-
-    emb = docs.select(F.col(id_col).alias("doc_id"),
-                      mock_embedding(text_col).cast("array<double>").alias("embedding"),
-                      *payload_cols)
+    emb = doc_embeddings(docs, id_col, text_col, payload_cols)
     # train_sample_mod: codebook trains on the deterministic hash
     # sample (similarity.train_sample) — the 100 TB practice; the FULL
     # corpus is still assigned and written below under the frozen result
@@ -469,23 +415,18 @@ def build_dense_ivf(docs: DataFrame, path: str, n_centroids: int = 16,
                                id_col="doc_id", vec_col="embedding",
                                train_sample_mod=train_sample_mod)
     spark = docs.sparkSession
-    codebook = F.broadcast(_codebook_df(spark, cent_rows))
     # NO spread before the partitionBy write (r14, measured): a spread
     # multiplies the per-cell file count by the partition count (the
     # guide §6 small-files trap measured on write_ivfpq_index) and the
     # embed+assign map is not compute-bound locally
-    assigned = emb.crossJoin(codebook).withColumn(
-        "centroid_id", -F.array_max(_nearest_centroids("embedding"))["negcid"]
-    ).drop("cents")
+    assigned = assign_cells(
+        emb, F.broadcast(_codebook_df(spark, cent_rows)), "embedding")
     # the cell-partitioned table and the tiny codebook sidecar are
     # independent writes — overlap them (§2.6)
     concurrently(
         lambda: assigned.write.mode("overwrite").partitionBy("centroid_id")
                         .parquet(f"{path}/dense_ivf"),
-        lambda: spark.createDataFrame(
-            [(int(r["cid"]), [float(x) for x in r["cv"]]) for r in cent_rows],
-            "cid bigint, cv array<double>",
-        ).write.mode("overwrite").parquet(f"{path}/codebook"),
+        lambda: _write_codebook(spark, cent_rows, path, "codebook"),
     )
 
 
@@ -496,9 +437,10 @@ def ivf_append(spark: SparkSession, path: str, new_docs: DataFrame,
     FAISS train-vs-add split (IndexIVF.add assigns against the frozen
     quantizer; reference continuous sync models.py:291-294 needs
     exactly this so a delta batch never re-reads the corpus): load the
-    sidecar codebook, assign the new docs' embeddings with the SAME
-    argmax expression build_dense_ivf used, and dynamic-partition
-    APPEND into the existing centroid_id directories.
+    sidecar codebook (_load_codebook: cached, so a sync step pays no
+    extra Spark job for it), assign the new docs' embeddings with the
+    SAME similarity.assign_cells build_dense_ivf used, and
+    dynamic-partition APPEND into the existing centroid_id directories.
 
     Serving needs no change: dense_serve_ivf probes the same cells and
     partition pruning keeps working because appends land under the
@@ -512,27 +454,13 @@ def ivf_append(spark: SparkSession, path: str, new_docs: DataFrame,
     Scale: delta-sized work only — one broadcast-codebook map over the
     new rows + an append write; no shuffle of existing index data.
     """
-    from semantik_spark.operators.similarity import (
-        _codebook_df, _nearest_centroids,
-    )
-
-    cent_rows = [
-        (int(r["cid"]), list(r["cv"]))
-        for r in spark.read.parquet(f"{path}/codebook").collect()
-    ]
     codebook = F.broadcast(_codebook_df(spark, [
-        {"cid": cid, "cv": cv} for cid, cv in sorted(cent_rows)
+        {"cid": cid, "cv": cv}
+        for cid, cv in _load_codebook(spark, path, "codebook")
     ]))
-    emb = new_docs.select(
-        F.col(id_col).alias("doc_id"),
-        mock_embedding(text_col).cast("array<double>").alias("embedding"),
-        *payload_cols,
-    )
-    assigned = emb.crossJoin(codebook).withColumn(
-        "centroid_id", -F.array_max(_nearest_centroids("embedding"))["negcid"]
-    ).drop("cents")
-    assigned.write.mode("append").partitionBy("centroid_id") \
-        .parquet(f"{path}/dense_ivf")
+    emb = doc_embeddings(new_docs, id_col, text_col, payload_cols)
+    assign_cells(emb, codebook, "embedding").write.mode("append") \
+        .partitionBy("centroid_id").parquet(f"{path}/dense_ivf")
 
 
 def _mock_embedding_py(text: str) -> list[float]:
@@ -572,96 +500,112 @@ def _cosine_py(a: list[float], b: list[float]) -> float:
     return dot / nn if nn > 0 else 0.0
 
 
-#: driver-side codebook cache keyed by (dir, mtime) — a serving process
-#: holds the n_centroids x dim floats in memory; re-reading the parquet
-#: per request paid a full Spark job (~0.2-0.4 s locally) for data that
-#: only changes on retrain (overwrite recreates the dir, so the mtime
-#: key invalidates exactly then; ivf_append never touches the codebook)
-_CODEBOOK_CACHE: dict[str, tuple[float, list]] = {}
+#: driver-side codebook cache keyed by (dir, part-file listing) — a
+#: serving process holds the n_centroids x dim floats in memory;
+#: re-reading the parquet per request paid a full Spark job (~0.2-0.4 s
+#: locally) for data that only changes on retrain. Every rewrite
+#: (_write_codebook's overwrite) creates part files named with a fresh
+#: write-job UUID, so the listing key invalidates exactly then, whatever
+#: the filesystem's timestamp resolution; ivf_append reads through the
+#: cache and never writes the codebook.
+_CODEBOOK_CACHE: dict[str, tuple[tuple, list]] = {}
 
 
-def _load_codebook(spark: SparkSession, path: str) -> list:
+def _load_codebook(spark: SparkSession, path: str, name: str) -> list:
+    """The codebook sidecar ``{path}/{name}`` as [(cid, [floats])]
+    sorted by cid — every codebook read (dense_serve_ivf,
+    hybrid_serve_approx, ivf_append, ivfpq_serve) goes through here."""
     import os
 
-    d = f"{path}/codebook"
+    d = f"{path}/{name}"
     try:
-        mtime = os.path.getmtime(d)
+        key = tuple(sorted(os.listdir(d)))
     except OSError:
-        mtime = -1.0
+        key = ()
     hit = _CODEBOOK_CACHE.get(d)
-    if hit is not None and hit[0] == mtime:
+    if hit is not None and key and hit[0] == key:
         return hit[1]
     rows = sorted(
         ((int(r["cid"]), [float(x) for x in r["cv"]])
          for r in spark.read.parquet(d).collect()),
         key=lambda t: t[0],
     )
-    _CODEBOOK_CACHE[d] = (mtime, rows)
+    _CODEBOOK_CACHE[d] = (key, rows)
     return rows
 
 
-def _plan_text_probes(spark: SparkSession, queries: DataFrame,
-                      cent_rows: list, nprobe: int,
-                      query_id_col: str = "query_id",
-                      query_text_col: str = "query_text"):
-    """Driver-side probe planning shared by dense_serve_ivf and
-    hybrid_serve_approx: embed each query with the bit-identical
-    Python twin, rank codebook cells, and build the probes table as
-    literals — ONE Spark job per serve. The query-id column keeps the
-    CALLER'S type (derived from the queries schema, the ivfpq_serve
-    recipe) — a hardcoded string type rejected integer-keyed query
-    batches on these two paths only. Returns (probes_df, probed_cells)."""
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
+def _write_codebook(spark: SparkSession, cent_rows: list, path: str,
+                    name: str) -> None:
+    """Write a trained codebook as the tiny ``{path}/{name}`` sidecar
+    (cid bigint, cv array<double>) — the one writer both IVF builds
+    use; _load_codebook reads it back."""
+    spark.createDataFrame(
+        [(int(r["cid"]), [float(x) for x in r["cv"]]) for r in cent_rows],
+        "cid bigint, cv array<double>",
+    ).write.mode("overwrite").parquet(f"{path}/{name}")
+
+
+def _plan_probes(qrows: list, cent_rows: list, nprobe: int) -> list:
+    """Driver-side probe planning for every IVF serve path: the query
+    batch (tiny by definition — this is the serve path) and the
+    codebook (n_centroids × dim floats) are both driver-scale, so each
+    (query_id, vector) row of ``qrows`` ranks the codebook cells with
+    the bit-identical cosine twin (tie → smaller cid) and keeps its
+    ``nprobe`` nearest. Callers build the probes table from these
+    literal rows, so planning runs no Spark job, and the probed-cell
+    list is a static isin that Catalyst turns into PartitionFilters on
+    the centroid_id layout (asserted in tests/test_plans.py) — at
+    100 TB a probe reads nprobe/n_centroids of the index FROM DISK.
+    Returns [(query_id, qv, centroid_id)]."""
     probe_rows = []
-    for r in queries.select(F.col(query_id_col).alias("query_id"),
-                            F.col(query_text_col).alias("query_text")).collect():
-        qv = _mock_embedding_py(str(r["query_text"]))
+    for qid, qv in qrows:
         ranked = sorted(((_cosine_py(qv, cv), -cid) for cid, cv in cent_rows),
                         reverse=True)[:nprobe]
-        probe_rows += [(r["query_id"], qv, -negcid) for _, negcid in ranked]
+        probe_rows += [(qid, qv, -negcid) for _, negcid in ranked]
+    return probe_rows
+
+
+def _ivf_dense_scores(spark: SparkSession, path: str, queries: DataFrame,
+                      nprobe: int, predicate: dict | None = None,
+                      query_id_col: str = "query_id",
+                      query_text_col: str = "query_text") -> DataFrame:
+    """IVF dense branch: (query_id, doc_id, score) over the probed cells
+    of dense_ivf/. Queries are embedded on the driver with the
+    bit-identical _mock_embedding_py twin and planned by _plan_probes,
+    which makes the whole serve ONE Spark job (previously a
+    codebook-scoring job and a distinct-cells collect ran before the
+    real query: 2.3s → 0.9s at sf0.1). Filtered ANN (F2 ∘ probe
+    pruning): partition pruning on centroid_id AND payload
+    PushedFilters compose on the same scan, pre-ranking — k fills from
+    eligible docs inside probed cells only."""
+    qrows = [
+        (r["query_id"], _mock_embedding_py(str(r["query_text"])))
+        for r in queries.select(F.col(query_id_col).alias("query_id"),
+                                F.col(query_text_col).alias("query_text")).collect()
+    ]
+    probe_rows = _plan_probes(qrows, _load_codebook(spark, path, "codebook"), nprobe)
+    # query_id keeps the CALLER'S type (integer-keyed batches too)
     probes = spark.createDataFrame(
         probe_rows,
-        f"query_id {qid_type}, qv array<double>, centroid_id bigint")
-    return probes, sorted({cid for _, _, cid in probe_rows})
+        f"query_id {queries.schema[query_id_col].dataType.simpleString()}, "
+        "qv array<double>, centroid_id bigint")
+    index = spark.read.parquet(f"{path}/dense_ivf").where(
+        F.col("centroid_id").isin(sorted({r[2] for r in probe_rows})))
+    if predicate is not None:
+        index = index.where(compile_predicate(predicate))
+    return index.join(F.broadcast(probes), "centroid_id").select(
+        "query_id", "doc_id", cosine("embedding", "qv").alias("score")
+    )
 
 
 def dense_serve_ivf(spark: SparkSession, path: str, queries: DataFrame,
                     k: int = 10, nprobe: int = 4, predicate: dict | None = None,
                     query_id_col: str = "query_id",
                     query_text_col: str = "query_text") -> DataFrame:
-    """Dense top-k against the partitioned IVF index.
-
-    Probe planning happens ON THE DRIVER: the query batch (tiny by
-    definition — this is the serve path) and the codebook (n_centroids
-    × dim floats) are both driver-scale, so query embeddings and
-    nearest-cell selection are computed in Python with bit-identical
-    twins of the Column expressions, and the probes table is created as
-    literals. That makes the whole serve ONE Spark job — previously a
-    codebook-scoring job and a distinct-cells collect ran before the
-    real query (2.3s → 0.9s at sf0.1).
-
-    The probed-cell isin predicate is static, so Catalyst turns it into
-    PartitionFilters on the centroid_id directory layout (asserted in
-    tests/test_plans.py) — at 100 TB a probe reads nprobe/n_centroids
-    of the index FROM DISK."""
-    from semantik_spark.functions.vectors import cosine
-
-    cent_rows = _load_codebook(spark, path)
-    probes, probed_cells = _plan_text_probes(
-        spark, queries, cent_rows, nprobe, query_id_col, query_text_col)
-    # filtered ANN (F2 ∘ probe pruning): partition pruning on
-    # centroid_id AND payload PushedFilters compose on the same scan,
-    # pre-ranking — k fills from eligible docs inside probed cells only
-    index = spark.read.parquet(f"{path}/dense_ivf").where(
-        F.col("centroid_id").isin(probed_cells)
-    ).where(compile_predicate(predicate))
-    scored = index.join(F.broadcast(probes), "centroid_id").select(
-        "query_id", "doc_id", cosine("embedding", "qv").alias("score")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    """Dense top-k against the partitioned IVF index (_ivf_dense_scores,
+    optionally payload-filtered by ``predicate``)."""
+    return search._topk(_ivf_dense_scores(
+        spark, path, queries, nprobe, predicate, query_id_col, query_text_col), k)
 
 
 def write_ivfpq_index(corpus: DataFrame, path: str, dim: int = 64,
@@ -697,12 +641,9 @@ def write_ivfpq_index(corpus: DataFrame, path: str, dim: int = 64,
     only per-vector state the ADC scan touches (dim/8 of the raw
     bytes at m=8,dim=64 float64), partition-pruned to probed cells.
     """
-    from semantik_spark.functions.caching import cache
     from semantik_spark.operators.similarity import (
-        _codebook_df, _l2, _pq_codebook_df, ivf_centroids, ivf_refine,
-        pq_codebooks,
+        _l2, _pq_codebook_df, pq_codebooks,
     )
-    from semantik_spark.functions.vectors import cosine
 
     d = dim // m
     spark = corpus.sparkSession
@@ -778,10 +719,7 @@ def write_ivfpq_index(corpus: DataFrame, path: str, dim: int = 64,
                      .parquet(f"{path}/ivfpq_codes"),
         lambda: c.select("vec_id", "v").write.mode("overwrite")
                  .parquet(f"{path}/ivfpq_full"),
-        lambda: spark.createDataFrame(
-            [(int(r["cid"]), [float(x) for x in r["cv"]]) for r in cent_rows],
-            "cid bigint, cv array<double>",
-        ).write.mode("overwrite").parquet(f"{path}/ivfpq_codebook"),
+        lambda: _write_codebook(spark, cent_rows, path, "ivfpq_codebook"),
         lambda: spark.createDataFrame(
             pq_rows, "s int, pos int, cid bigint, cv array<double>"
         ).write.mode("overwrite").parquet(f"{path}/ivfpq_pq"),
@@ -812,14 +750,8 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
 
     Row-identical to similarity.knn_ivfpq at equal parameters
     (test-pinned)."""
-    from semantik_spark.functions.vectors import cosine
     from pyspark.sql import Window
 
-    cent_rows = sorted(
-        ((int(r["cid"]), [float(x) for x in r["cv"]])
-         for r in spark.read.parquet(f"{path}/ivfpq_codebook").collect()),
-        key=lambda t: t[0],
-    )
     pq = spark.read.parquet(f"{path}/ivfpq_pq").collect()
     m = 1 + max(int(r["s"]) for r in pq)
     by_s: list[list] = [[] for _ in range(m)]
@@ -830,22 +762,18 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
         lst.sort(key=lambda t: t[0])
     cents_data = [[(cid, cv) for _, cid, cv in lst] for lst in by_s]
 
-    q_rows = queries.select(F.col(query_id_col).alias("query_id"),
-                            F.col(query_vec_col).alias("qv")).collect()
-    probe_rows = []
-    for r in q_rows:
-        qv = [float(x) for x in r["qv"]]
-        ranked = sorted(((_cosine_py(qv, cv), -cid) for cid, cv in cent_rows),
-                        reverse=True)[:nprobe]
-        cvs = dict(cent_rows)
-        probe_rows += [(r["query_id"], qv, -negcid, cvs[-negcid])
-                       for _, negcid in ranked]
+    qid_type = queries.schema[query_id_col].dataType.simpleString()
+    q_rows = [(r["query_id"], [float(x) for x in r["qv"]])
+              for r in queries.select(F.col(query_id_col).alias("query_id"),
+                                      F.col(query_vec_col).alias("qv")).collect()]
+    cent_rows = _load_codebook(spark, path, "ivfpq_codebook")
+    cvs = dict(cent_rows)
+    probe_rows = _plan_probes(q_rows, cent_rows, nprobe)
     probes = spark.createDataFrame(
-        probe_rows,
-        f"query_id {queries.schema[query_id_col].dataType.simpleString()}, "
-        "qv array<double>, centroid_id bigint, ccv array<double>",
-    )
-    probed_cells = sorted({cid for _, _, cid, _ in probe_rows})
+        [r + (cvs[r[2]],) for r in probe_rows],
+        f"query_id {qid_type}, qv array<double>, centroid_id bigint, "
+        "ccv array<double>")
+    probed_cells = sorted({r[2] for r in probe_rows})
 
     # phase 1: ADC over probed cells only (partition pruning on the
     # directory layout); recon travels as DATA via the one-row
@@ -881,14 +809,9 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
     cand_ids = sorted({int(r["vec_id"]) for r in cand_rows})
     cand = spark.createDataFrame(
         [(r["query_id"], int(r["vec_id"])) for r in cand_rows],
-        f"query_id {queries.schema[query_id_col].dataType.simpleString()}, "
-        "vec_id bigint",
+        f"query_id {qid_type}, vec_id bigint",
     )
-    qdf = spark.createDataFrame(
-        [(r["query_id"], [float(x) for x in r["qv"]]) for r in q_rows],
-        f"query_id {queries.schema[query_id_col].dataType.simpleString()}, "
-        "qv array<double>",
-    )
+    qdf = spark.createDataFrame(q_rows, f"query_id {qid_type}, qv array<double>")
     full = spark.read.parquet(f"{path}/ivfpq_full").where(
         F.col("vec_id").isin(cand_ids)
     )
@@ -928,20 +851,9 @@ def hybrid_serve_approx(spark: SparkSession, path: str, queries: DataFrame,
     index."""
     if search_k is None:
         search_k = max(k * 2, 20)
-    from semantik_spark.functions.vectors import cosine
-
-    cent_rows = _load_codebook(spark, path)
-    probes, probed_cells = _plan_text_probes(spark, queries, cent_rows, nprobe)
-    index = spark.read.parquet(f"{path}/dense_ivf").where(
-        F.col("centroid_id").isin(probed_cells)
-    )
-    dscored = index.join(F.broadcast(probes), "centroid_id").select(
-        "query_id", "doc_id", cosine("embedding", "qv").alias("score")
-    )
-    terms = spark.read.parquet(f"{path}/terms")
-    post = spark.read.parquet(f"{path}/postings_pruned")
-    sscored = bm25.score(post, bm25.encode_queries(queries, terms))
-    return _rrf_union_fuse(dscored, sscored, k, search_k)
+    return _rrf_union_fuse(
+        _ivf_dense_scores(spark, path, queries, nprobe),
+        _bm25_scores(spark, path, queries, "postings_pruned"), k, search_k)
 
 
 def delete_from_index(spark: SparkSession, path: str, deleted_docs: DataFrame,
@@ -1024,18 +936,13 @@ def delete_from_index(spark: SparkSession, path: str, deleted_docs: DataFrame,
     tok = cache(bm25.tokenize(live_deleted, id_col=id_col, text_col=text_col))
     # the two retractions are independent aggregations over the shared
     # cached tok — overlap their materialization (guide §2.6)
+    state = f"{path}/bm25_state"
     new_c, new_t = concurrently(
         lambda: checkpoint(bm25.retract_corpus_state(
-            _bm25_state_read(spark, path, "corpus"), tok)),
+            publish.read(spark, state, "corpus"), tok)),
         lambda: checkpoint(bm25.retract_term_state(
-            _bm25_state_read(spark, path, "terms"), tok)),
+            publish.read(spark, state, "terms"), tok)),
     )
-
-    def _write_state(tmp: str) -> None:
-        concurrently(
-            lambda: new_c.write.mode("overwrite").parquet(f"{tmp}/corpus"),
-            lambda: new_t.write.mode("overwrite").parquet(f"{tmp}/terms"),
-        )
 
     def _rebuild_terms() -> None:
         # reads only the CHECKPOINTED retracted state, never the files
@@ -1080,7 +987,7 @@ def delete_from_index(spark: SparkSession, path: str, deleted_docs: DataFrame,
     # through the tombstones, so they may only record docs whose
     # rewrites all completed.
     concurrently(
-        lambda: _bm25_state_swap(path, _write_state),
+        lambda: _publish_bm25_state(path, new_c, new_t),
         _rebuild_terms,
         *[_rewrite(sub, part) for sub, part in artifacts
           if os.path.exists(f"{path}/{sub}")],

@@ -182,6 +182,18 @@ def _nearest_centroids(vec: str) -> F.Column:
     )
 
 
+def assign_cells(df: DataFrame, codebook: DataFrame, vec_col: str) -> DataFrame:
+    """``df`` plus ``centroid_id``: the nearest cell of ``vec_col`` under
+    the broadcast ``codebook`` (_codebook_df; tie → smaller cid). The
+    one IVF assignment expression — codebook training (ivf_refine), the
+    in-one-run and persisted indexes (knn_ivf, serving.build_dense_ivf,
+    serving.ivf_append) and drift monitoring (ivf_cell_histogram) all
+    call it, so a vector is always stored in the cell a probe picks."""
+    return df.crossJoin(codebook).withColumn(
+        "centroid_id", -F.array_max(_nearest_centroids(vec_col))["negcid"]
+    ).drop("cents")
+
+
 def ivf_refine(corpus: DataFrame, cent_rows: list, iters: int = 1,
                id_col: str = "vec_id", vec_col: str = "embedding",
                round_dp: int = 6,
@@ -209,15 +221,17 @@ def ivf_refine(corpus: DataFrame, cent_rows: list, iters: int = 1,
     # corpus ≈ ms of arithmetic), so repartitioning it costs more in
     # extra AQE stages/codegen than it parallelizes — knn_ivf measured
     # 3.7 → 6.6 s median with the spread (interleaved 5-rep noop,
-    # sf0.1). At 100 TB the scan itself is already many partitions, so
-    # the Lloyd step parallelizes naturally — which is SAFE because the
-    # per-(cell,dim) double sums are proven ORDER-FREE for this data at
-    # 6 dp by the order-margin audit (see _ORDER_AUDIT above /
-    # tools/order_margin_audit.py / plans/r14/order_margin_audit.txt:
-    # min margin ≥ 1e4× the any-order summation error bound at every
-    # SF). That proof is what removes r13's "order-sensitivity lock" on
-    # this path; it makes ANY partitioning (scan splits, AQE, retries)
-    # round to identical centroid bits.
+    # sf0.1). Over many partitions (scan splits, AQE, retries) the
+    # per-(cell,dim) double sums accumulate in a different order. The
+    # 6 dp means are order-free only where the order-margin audit has
+    # proven it: tools/order_margin_audit.py showed a min margin ≥ 1e4×
+    # the any-order summation error bound for the AUDITED data (the
+    # test-data SFs, plans/r14/order_margin_audit.txt) — not for data in
+    # general. Rerun the audit whenever the data or the training changes.
+    # A FAIL means some mean sits near a 6 dp rounding boundary, so a
+    # different partitioning can move a centroid by one unit in the 6th
+    # decimal; results then depend on placement and may disagree with
+    # the oracle until training runs on a fixed partitioning again.
     c = corpus.select(F.col(id_col).alias("vec_id"),
                       F.col(vec_col).cast("array<double>").alias("v"))
     rows = [{"cid": int(r["cid"]), "cv": [float(x) for x in r["cv"]]}
@@ -225,10 +239,7 @@ def ivf_refine(corpus: DataFrame, cent_rows: list, iters: int = 1,
     dim = len(rows[0]["cv"]) if rows else 0
     audit = _order_audit_on()
     for _ in range(iters):
-        codebook = F.broadcast(_codebook_df(spark, rows))
-        assigned = c.crossJoin(codebook).withColumn(
-            "centroid_id", -F.array_max(_nearest_centroids("v"))["negcid"]
-        ).drop("cents")
+        assigned = assign_cells(c, F.broadcast(_codebook_df(spark, rows)), "v")
         # posexplode + groupBy((cid, dim)): the explode is map-side and
         # feeds straight into a hash aggregate whose partial (map-side
         # combine) reduces each partition to n_centroids×dim sums before
@@ -300,9 +311,7 @@ def knn_ivf(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # ranks, so spreading them is value-neutral (see knn_bruteforce)
     c = spread(corpus.select(F.col(id_col).alias("vec_id"),
                              F.col(vec_col).alias("v")), "vec_id")
-    assigned = c.crossJoin(codebook).withColumn(
-        "centroid_id", -F.array_max(_nearest_centroids("v"))["negcid"]
-    ).drop("cents")
+    assigned = assign_cells(c, codebook, "v")
     q = queries.select(F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qv"))
     top_cells = F.slice(F.reverse(F.array_sort(_nearest_centroids("qv"))), 1, nprobe)
     probes = q.crossJoin(codebook).withColumn(
@@ -812,14 +821,10 @@ def ivf_cell_histogram(df: DataFrame, cent_rows: list,
     pays ONE corpus-scale assignment map instead of re-deriving the
     reference histogram per call. Counts are a commutative monoid, so
     per-append partials merge by groupBy(centroid_id).sum."""
-    spark = df.sparkSession
-    codebook = F.broadcast(_codebook_df(spark, cent_rows))
+    codebook = F.broadcast(_codebook_df(df.sparkSession, cent_rows))
     c = df.select(F.col(id_col).alias("vec_id"),
                   F.col(vec_col).cast("array<double>").alias("v"))
-    assigned = c.crossJoin(codebook).withColumn(
-        "centroid_id", -F.array_max(_nearest_centroids("v"))["negcid"]
-    ).drop("cents")
-    return assigned.groupBy("centroid_id").agg(
+    return assign_cells(c, codebook, "v").groupBy("centroid_id").agg(
         F.count("*").cast("bigint").alias("n"))
 
 

@@ -19,6 +19,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from semantik_spark.functions import publish
 from semantik_spark.functions.caching import checkpoint as _ckpt
 
 
@@ -154,7 +155,6 @@ def incremental_index(stream: DataFrame, idx_dir: str, catalog_path: str,
     nightly) to re-level the stale old-doc weights — exactly the trade
     the reference's periodic re-sync makes. Returns the StreamingQuery.
     """
-    from semantik_spark.functions.vectors import mock_embedding
     from semantik_spark.operators import serving
 
     def process(batch: DataFrame, batch_id: int) -> None:
@@ -199,11 +199,8 @@ def incremental_index(stream: DataFrame, idx_dir: str, catalog_path: str,
         # _last_batch marker. Previously the catalog committed FIRST:
         # a crash after it silently dropped the batch from the index
         # forever (the replay's anti-join matched everything).
-        changed.select(
-            F.col(id_col).alias("doc_id"),
-            mock_embedding(text_col).alias("embedding"),
-            "_batch_id",
-        ).write.mode("append").parquet(f"{idx_dir}/dense_log")
+        serving.doc_embeddings(changed, id_col, text_col, ("_batch_id",)) \
+            .write.mode("append").parquet(f"{idx_dir}/dense_log")
         if sparse_refresh == "merge" and n_updates == 0:
             # APPEND path: batch-sized stats delta-merge, no corpus
             # scan; batch_id makes a checkpoint replay a no-op
@@ -211,8 +208,6 @@ def incremental_index(stream: DataFrame, idx_dir: str, catalog_path: str,
                                         id_col=id_col, text_col=text_col,
                                         batch_id=batch_id)
         elif sparse_refresh:
-            from pyspark.sql import Window
-
             # the catalog is an append log (batch-stamped): resolve to
             # the newest version per doc — INCLUDING this batch, which
             # is not in the catalog yet — before the exact rebuild
@@ -221,12 +216,8 @@ def incremental_index(stream: DataFrame, idx_dir: str, catalog_path: str,
                     .unionByName(changed, allowMissingColumns=True)
             except Exception:  # first batch: no catalog yet
                 catalog = changed
-            w = Window.partitionBy(id_col).orderBy(F.desc("_batch_id"))
-            latest = (
-                catalog.withColumn("_rn", F.row_number().over(w))
-                .where(F.col("_rn") == 1).drop("_rn")
-            )
-            serving.build_sparse(latest, idx_dir, id_col=id_col, text_col=text_col)
+            serving.build_sparse(_newest_per_id(catalog, id_col), idx_dir,
+                                 id_col=id_col, text_col=text_col)
         changed.write.mode("append").parquet(catalog_path)
 
     return (
@@ -237,26 +228,33 @@ def incremental_index(stream: DataFrame, idx_dir: str, catalog_path: str,
     )
 
 
+def _newest_per_id(log: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """The newest (_batch_id) row per ``id_col`` of a batch-stamped
+    append log — the read-time upsert behind the catalog rebuild,
+    dense_latest, dense_as_of and compact_dense_log."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy(id_col).orderBy(F.desc("_batch_id"))
+    return (
+        log.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1).drop("_rn")
+    )
+
+
 def dense_latest(spark: SparkSession, idx_dir: str) -> DataFrame:
     """Resolve the append-only dense log to its current state: the
     newest (_batch_id) row per doc_id — read-time upsert, compacted by
     maintenance jobs when the log grows."""
-    from pyspark.sql import Window
-
-    log = spark.read.parquet(f"{idx_dir}/dense_log")
-    w = Window.partitionBy("doc_id").orderBy(F.desc("_batch_id"))
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
+    return _newest_per_id(spark.read.parquet(f"{idx_dir}/dense_log")) \
         .select("doc_id", "embedding")
-    )
 
 
 def compact_dense_log(spark: SparkSession, idx_dir: str) -> dict:
     """Maintenance compaction for the append-only dense log: collapse
     every doc to its newest (_batch_id) version and atomically swap the
-    compacted segment in, so read-time upsert cost (dense_latest's
-    window) returns to O(live docs) after heavy churn.
+    compacted segment in (functions.publish.swap), so read-time upsert
+    cost (dense_latest's window) returns to O(live docs) after heavy
+    churn.
 
     Local-FS swap is staging-dir + rename (POSIX-atomic at the dir
     entry); on an object store the same job writes a new segment and
@@ -269,11 +267,6 @@ def compact_dense_log(spark: SparkSession, idx_dir: str) -> dict:
 
     Returns {"rows_before", "rows_after", "batches_merged"}.
     """
-    import os
-    import shutil
-
-    from pyspark.sql import Window
-
     log_dir = f"{idx_dir}/dense_log"
     log = spark.read.parquet(log_dir)
     stats = log.agg(
@@ -281,19 +274,7 @@ def compact_dense_log(spark: SparkSession, idx_dir: str) -> dict:
         F.count_distinct("doc_id").alias("nd"),
         F.count_distinct("_batch_id").alias("nb"),
     ).collect()[0]
-    w = Window.partitionBy("doc_id").orderBy(F.desc("_batch_id"))
-    latest = (
-        log.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    tmp = f"{idx_dir}/dense_log__compacting"
-    latest.write.mode("overwrite").parquet(tmp)
-    old = f"{idx_dir}/dense_log__old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(log_dir, old)
-    os.rename(tmp, log_dir)
-    shutil.rmtree(old, ignore_errors=True)
+    publish.swap(log_dir, _newest_per_id(log).write.mode("overwrite").parquet)
     return {
         "rows_before": int(stats["n"]),
         "rows_after": int(stats["nd"]),
@@ -310,103 +291,23 @@ def dense_as_of(spark: SparkSession, idx_dir: str, batch_id: int) -> DataFrame:
     the newest; run it with a retention floor if as-of queries must
     reach further back). One pushed-down range filter + the same
     per-doc window as dense_latest."""
-    from pyspark.sql import Window
-
     log = spark.read.parquet(f"{idx_dir}/dense_log").where(
         F.col("_batch_id") <= batch_id
     )
-    w = Window.partitionBy("doc_id").orderBy(F.desc("_batch_id"))
-    return (
-        log.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select("doc_id", "embedding")
-    )
-
-
-def _read_state(spark: SparkSession, state_path: str) -> DataFrame | None:
-    """Read a sketch state table, tolerating the swap crash window.
-
-    The state swap is rename(state, state__old); rename(tmp, state) —
-    a crash between the two renames leaves the sketch ONLY at
-    ``state__old``. A bare read-or-None here would silently restart the
-    sketch from empty (ADVICE r5): fall back to ``__old`` before
-    treating the read failure as first-batch. Set-union merges (KMV,
-    HLL, SCD2's lattice) are idempotent under replay by algebra;
-    count-ADDITION sketches are NOT — a crash after the swap completes
-    but before the streaming checkpoint commits would replay the batch
-    against the POST-batch state and double-add it, which is why every
-    additive sink also carries the ``_last_batch`` marker
-    (_last_merged_batch) and skips replayed batch ids.
-
-    Returns None ONLY when neither location exists (a genuinely first
-    batch); a read failure on an EXISTING state propagates — the
-    previous bare except treated any transient read error as
-    first-batch and silently reset the sketch to the latest delta
-    batch (the serving._bm25_state_read hardening, applied here)."""
-    import os
-
-    if os.path.exists(state_path):
-        try:
-            return spark.read.parquet(state_path)
-        except Exception:
-            if os.path.exists(state_path + "__old"):
-                return spark.read.parquet(state_path + "__old")
-            raise
-    if os.path.exists(state_path + "__old"):
-        return spark.read.parquet(state_path + "__old")
-    return None
-
-
-def _swap_state(merged: DataFrame, state_path: str,
-                batch_id: int | None = None) -> None:
-    """Atomic publish of a merged state: write to ``__merging``, rename
-    the current state to ``__old``, rename ``__merging`` in, drop
-    ``__old`` — the staging-dir+rename shape every sink here used
-    inline, deduplicated. With ``batch_id``, a ``_last_batch`` marker
-    file rides INSIDE the staging dir (the underscore prefix keeps it
-    invisible to parquet readers), so the publishing rename makes the
-    state and its batch watermark visible atomically."""
-    import os
-    import shutil
-
-    tmp = state_path + "__merging"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(tmp)
-    if batch_id is not None:
-        with open(os.path.join(tmp, "_last_batch"), "w") as fh:
-            fh.write(str(int(batch_id)))
-    old_dir = state_path + "__old"
-    shutil.rmtree(old_dir, ignore_errors=True)
-    if os.path.exists(state_path):
-        os.rename(state_path, old_dir)
-    os.rename(tmp, state_path)
-    shutil.rmtree(old_dir, ignore_errors=True)
-
-
-def _last_merged_batch(state_path: str) -> int | None:
-    """The state's ``_last_batch`` marker, with the same ``__old``
-    crash-window fallback as _read_state. Additive (count-sum) sinks
-    check it at the top of process(): Structured Streaming replays a
-    crashed batch under the SAME batch_id, so ``batch_id <= marker``
-    means the state already contains this batch and merging it again
-    would double-add — the replay becomes a no-op instead."""
-    import os
-
-    for p in (state_path, state_path + "__old"):
-        f = os.path.join(p, "_last_batch")
-        if os.path.exists(f):
-            with open(f) as fh:
-                return int(fh.read().strip())
-    return None
+    return _newest_per_id(log).select("doc_id", "embedding")
 
 
 def _served_state(spark: SparkSession, state_path: str) -> DataFrame:
-    """Reader-side twin of _read_state: every *_from_state server rides
-    the same __old crash-window fallback the writers use — a crash
-    between the two publish renames must not black out serving until
-    the next micro-batch happens to run — and a genuinely missing
-    state raises a clear error instead of an opaque parquet exception."""
-    st = _read_state(spark, state_path)
+    """Reader side of the sketch states (functions.publish): every
+    *_from_state server rides the same __old crash-window fallback the
+    writers use — a crash between the two publish renames must not
+    black out serving until the next micro-batch happens to run — and a
+    genuinely missing state raises a clear error instead of an opaque
+    parquet exception. Set-union merges (KMV, HLL, SCD2's lattice) are
+    idempotent under replay by algebra; count-ADDITION sketches are
+    NOT, which is why every sink checks publish.last_batch and skips a
+    replayed batch id."""
+    st = publish.read(spark, state_path)
     if st is None:
         raise FileNotFoundError(
             f"no sketch state at {state_path} (nor its __old crash-window "
@@ -432,14 +333,11 @@ def streaming_kmv(stream: DataFrame, state_path: str, checkpoint: str,
     trigger via stream source options; this uses the default
     foreachBatch trigger wiring of incremental_ingest).
     """
-    import os
-    import shutil
-
     from semantik_spark.functions.hashing import hash60
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
+        last = publish.last_batch(state_path)
         if last is not None and batch_id <= last:
             return  # checkpoint replay of an already-merged batch
         from pyspark.sql import Window
@@ -468,7 +366,7 @@ def streaming_kmv(stream: DataFrame, state_path: str, checkpoint: str,
             .groupBy("g")
             .agg(F.array_sort(F.collect_list("u")).alias("us"))
         )
-        old = _read_state(spark, state_path)
+        old = publish.read(spark, state_path)
         if old is not None:
             merged = (
                 old.unionByName(partial)
@@ -482,7 +380,7 @@ def streaming_kmv(stream: DataFrame, state_path: str, checkpoint: str,
             )
         else:
             merged = partial
-        _swap_state(merged, state_path, batch_id)
+        publish.swap(state_path, merged.write.mode("overwrite").parquet, batch_id)
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -525,18 +423,15 @@ def streaming_ddsketch(stream: DataFrame, state_path: str, checkpoint: str,
     of growing state. Swap is staging-dir + rename like streaming_kmv.
     Mirrors streaming_kmv's foreachBatch wiring.
     """
-    import os
-    import shutil
-
     from semantik_spark.operators.sketches import ddsketch_buckets, ddsketch_collapse
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
+        last = publish.last_batch(state_path)
         if last is not None and batch_id <= last:
             return  # checkpoint replay of an already-merged batch
         partial = ddsketch_buckets(batch, group_col, value_col, alpha)
-        old = _read_state(spark, state_path)
+        old = publish.read(spark, state_path)
         if old is not None:
             merged = (
                 old.unionByName(partial)
@@ -547,7 +442,7 @@ def streaming_ddsketch(stream: DataFrame, state_path: str, checkpoint: str,
             merged = partial
         if max_buckets is not None:
             merged = ddsketch_collapse(merged, max_buckets)
-        _swap_state(merged, state_path, batch_id)
+        publish.swap(state_path, merged.write.mode("overwrite").parquet, batch_id)
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -587,14 +482,11 @@ def streaming_heavy_hitters(stream: DataFrame, state_path: str, checkpoint: str,
     carry the scalar; a separate meta file would break the single
     atomic swap). Serve exact answers with heavy_hitters_from_state.
     """
-    import os
-    import shutil
-
     from semantik_spark.operators.frequency import mg_merge, mg_summarize
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
+        last = publish.last_batch(state_path)
         if last is not None and batch_id <= last:
             return  # checkpoint replay of an already-merged batch
         keys = batch.select(F.col(key_col).cast("string").alias("k")).where(
@@ -602,7 +494,7 @@ def streaming_heavy_hitters(stream: DataFrame, state_path: str, checkpoint: str,
         )
         n_batch = keys.count()
         partial = mg_summarize(batch, key_col, m)
-        old = _read_state(spark, state_path)
+        old = publish.read(spark, state_path)
         if old is not None:
             old_n = old.where(F.col("k").isNull())
             merged = mg_merge(
@@ -617,7 +509,7 @@ def streaming_heavy_hitters(stream: DataFrame, state_path: str, checkpoint: str,
         state = merged.unionByName(
             total.select(F.lit(None).cast("string").alias("k"), "c")
         )
-        _swap_state(state, state_path, batch_id)
+        publish.swap(state_path, state.write.mode("overwrite").parquet, batch_id)
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -719,18 +611,15 @@ def streaming_count_min(stream: DataFrame, state_path: str, checkpoint: str,
     State is one parquet table (row int, bucket int, n bigint),
     <= depth*width rows forever — constant-size streaming frequency
     state, served point-lookups via count_min_state_estimates."""
-    import os
-    import shutil
-
     from semantik_spark.operators.frequency import count_min_cells
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
+        last = publish.last_batch(state_path)
         if last is not None and batch_id <= last:
             return  # checkpoint replay of an already-merged batch
         partial = count_min_cells(batch, key_col, depth, width)
-        old = _read_state(spark, state_path)
+        old = publish.read(spark, state_path)
         if old is not None:
             merged = (
                 old.unionByName(partial)
@@ -739,7 +628,7 @@ def streaming_count_min(stream: DataFrame, state_path: str, checkpoint: str,
             )
         else:
             merged = partial
-        _swap_state(merged, state_path, batch_id)
+        publish.swap(state_path, merged.write.mode("overwrite").parquet, batch_id)
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -837,7 +726,7 @@ def streaming_lsh_dedup(stream: DataFrame, state_path: str, checkpoint: str,
                     F.col("a.sig").alias("sa"), F.col("b.sig").alias("sb"))
         )
         cands = in_batch
-        old = _read_state(spark, state_path)
+        old = publish.read(spark, state_path)
         if old is not None:
             o = old.alias("o")
             first_is_new = F.col("a.doc_id") < F.col("o.doc_id")
@@ -1024,23 +913,20 @@ def streaming_scd2(stream: DataFrame, state_path: str, checkpoint: str,
     |history| + |batch| rows — history is version-chains, bounded by
     change volume, not event volume; no joins, no iteration.
     """
-    import os
-    import shutil
-
     from semantik_spark.operators import scd
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
+        last = publish.last_batch(state_path)
         if last is not None and batch_id <= last:
             return  # checkpoint replay of an already-merged batch
-        old = _read_state(spark, state_path)
+        old = publish.read(spark, state_path)
         if old is None:
             new = scd.scd2_history(batch, key_col, attr_cols, ts_col, seq_col)
         else:
             new = scd.scd2_merge(old, batch, key_col, attr_cols,
                                  ts_col, seq_col)
-        _swap_state(new, state_path, batch_id)
+        publish.swap(state_path, new.write.mode("overwrite").parquet, batch_id)
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -1066,21 +952,18 @@ def streaming_hll(stream: DataFrame, state_path: str, checkpoint: str,
     group regardless of stream volume. Swap is staging-dir + rename
     like streaming_kmv.
     """
-    import os
-    import shutil
-
     from semantik_spark.operators.sketches import (hll_merge_registers,
                                                    hll_registers)
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
+        last = publish.last_batch(state_path)
         if last is not None and batch_id <= last:
             return  # checkpoint replay of an already-merged batch
         partial = hll_registers(batch, group_col, value_col, p)
-        old = _read_state(spark, state_path)
+        old = publish.read(spark, state_path)
         merged = partial if old is None else hll_merge_registers(old, partial)
-        _swap_state(merged, state_path, batch_id)
+        publish.swap(state_path, merged.write.mode("overwrite").parquet, batch_id)
 
     return (
         stream.writeStream.foreachBatch(process)
@@ -1235,12 +1118,9 @@ def streaming_contingency(stream: DataFrame, state_path: str,
     stattests.chi_square_from_counts (counts compose exactly, so the
     served verdict hash-matches the batch test over the same rows).
     """
-    import os
-    import shutil
-
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        last = _last_merged_batch(state_path)
+        last = publish.last_batch(state_path)
         if last is not None and batch_id <= last:
             return  # checkpoint replay of an already-merged batch
         partial = (
@@ -1253,7 +1133,7 @@ def streaming_contingency(stream: DataFrame, state_path: str,
                      F.col(col_col).cast("string").alias("col_val"))
             .agg(F.count("*").cast("bigint").alias("n"))
         )
-        old = _read_state(spark, state_path)
+        old = publish.read(spark, state_path)
         if old is not None:
             merged = (
                 old.unionByName(partial)
@@ -1262,7 +1142,7 @@ def streaming_contingency(stream: DataFrame, state_path: str,
             )
         else:
             merged = partial
-        _swap_state(merged, state_path, batch_id)
+        publish.swap(state_path, merged.write.mode("overwrite").parquet, batch_id)
 
     return (
         stream.writeStream.foreachBatch(process)

@@ -316,7 +316,12 @@ def test_banded_candidates_salted_path_identical_and_spread(spark):
     hb = hot.select(F.col("doc_id").alias("doc_b"), "_bkey")
     joined = salted_join(ha, hb, on="_bkey", salt=8, fingerprint_col="doc_a")
     # AQE's partition coalescing hides the reducer spread at toy scale —
-    # freeze it so spark_partition_id reflects the actual hash layout
+    # freeze it so spark_partition_id reflects the actual hash layout.
+    # The shuffle needs at least `salt` reducers for the bound below to
+    # be meetable: on a 4-core session the default is 4, and 4 reducers
+    # can at best hold 62.5k/4 pairs each
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(max(8, int(parts))))
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
     try:
         sizes = [r["count"] for r in
@@ -324,6 +329,7 @@ def test_banded_candidates_salted_path_identical_and_spread(spark):
                        .groupBy("pid").count().collect()]
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        spark.conf.set("spark.sql.shuffle.partitions", parts)
     assert sum(sizes) == 250 * 250
     assert len(sizes) > 1
     assert max(sizes) < (250 * 250) / 4, sizes

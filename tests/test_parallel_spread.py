@@ -90,6 +90,7 @@ def test_concurrently_returns_in_call_order():
 
     assert concurrently(slow, lambda: "fast") == ["slow", "fast"]
     assert concurrently(lambda: 42) == [42]
+    assert concurrently() == []
 
 
 def test_concurrently_propagates_first_error():
@@ -111,6 +112,29 @@ def test_concurrently_propagates_first_error():
     with pytest.raises(ValueError, match="boom"):
         concurrently(boom, ok)
     assert ran == ["ok"]
+
+    # several failures: the first is raised, the others ride along as
+    # notes instead of being dropped
+    def bang():
+        raise KeyError("bang")
+
+    ran.clear()
+    with pytest.raises(ValueError, match="boom") as info:
+        concurrently(boom, ok, bang)
+    assert ran == ["ok"]
+    assert any("bang" in n for n in info.value.__notes__)
+
+    # a BaseException (Ctrl-C) is not collected: it propagates without
+    # waiting for the still-running thunks
+    import time
+
+    def interrupt():
+        raise KeyboardInterrupt
+
+    t0 = time.monotonic()
+    with pytest.raises(KeyboardInterrupt):
+        concurrently(interrupt, lambda: time.sleep(3))
+    assert time.monotonic() - t0 < 2.0
 
 
 def test_build_index_concurrent_writes_equal_artifacts(spark, tmp_path):

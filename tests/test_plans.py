@@ -1004,8 +1004,10 @@ def test_serve_paths_job_count_pins(spark, tmp_path):
     r6, >5x-contended run). A refactor that adds an exchange/action
     shows up here as a counter diff, deterministically. Bounds are the
     measured warmed counts (bm25 9, dense 5, ivf 6, hybrid 13 — also
-    recorded per-run in BENCH_DETAIL.json queries_counters); pinned as
-    <= so only regressions trip, never an optimization.
+    recorded per-run in BENCH_DETAIL.json queries_counters — plus
+    hybrid_approx 14 and rerank 19, so every serve_mix path of the
+    perfbench workload is pinned); pinned as <= so only regressions
+    trip, never an optimization.
 
     MEASUREMENT CONTEXT (VERDICT r12 item 3): warmed-in-process — each
     path executes once unmeasured immediately before the pinned run in
@@ -1014,12 +1016,13 @@ def test_serve_paths_job_count_pins(spark, tmp_path):
     counters, which are captured cold-session (serve-first): the same
     code measures extra FileIndex-listing/broadcast jobs cold (e.g.
     index_build 39 cold vs 21 warmed)."""
-    from semantik_spark.operators import serving
+    from semantik_spark.operators import rerank, serving
 
     docs = _mk_docs(spark)
     qdf = _mk_queries(spark)
     idx = str(tmp_path / "idx")
     serving.build_index(docs, idx)
+    serving.build_sparse_pruned(spark, idx)
     serving.build_dense_ivf(docs, idx, n_centroids=4)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
@@ -1030,6 +1033,12 @@ def test_serve_paths_job_count_pins(spark, tmp_path):
          lambda: serving.dense_serve_ivf(spark, idx, qdf, k=5, nprobe=2)),
         ("hybrid_serve", 13,
          lambda: serving.hybrid_serve(spark, idx, qdf, k=5, search_k=10)),
+        ("hybrid_serve_approx", 14,
+         lambda: serving.hybrid_serve_approx(spark, idx, qdf, k=5, nprobe=2)),
+        ("rerank", 19,
+         lambda: rerank.rerank(
+             serving.hybrid_serve(spark, idx, qdf, k=rerank.candidate_k(5)),
+             qdf, docs, k=5)),
     ]
     for name, bound, fn in paths:
         fn().count()  # warm: AQE stats / broadcast thresholds settle

@@ -96,10 +96,11 @@ def test_dense_serve_ivf_full_probe_equals_exact(spark, tmp_path):
 
 
 def test_dense_serve_filtered_pushes_predicate(spark, tmp_path):
-    """Payload-filtered dense serving: the predicate must reach the
-    parquet scan as a pushed filter (pre-ranking), and ranking must run
-    on the filtered subset so k is filled from eligible docs only."""
-    from semantik_spark.operators.serving import build_index, dense_serve_filtered
+    """Payload-filtered dense serving (dense_serve's ``predicate``): the
+    predicate must reach the parquet scan as a pushed filter
+    (pre-ranking), and ranking must run on the filtered subset so k is
+    filled from eligible docs only."""
+    from semantik_spark.operators.serving import build_index, dense_serve
 
     docs = spark.range(60).selectExpr(
         "id as doc_id",
@@ -109,7 +110,7 @@ def test_dense_serve_filtered_pushes_predicate(spark, tmp_path):
     idx = str(tmp_path / "idx")
     build_index(docs, idx, payload_cols=("lang",))
     qs = spark.createDataFrame([("q1", "alpha beta")], ["query_id", "query_text"])
-    hits = dense_serve_filtered(spark, idx, qs, predicate={"lang": "en"}, k=5)
+    hits = dense_serve(spark, idx, qs, predicate={"lang": "en"}, k=5)
     rows = hits.collect()
     assert len(rows) == 5
     assert all(r["doc_id"] % 3 == 0 for r in rows)  # only eligible docs ranked
@@ -232,6 +233,53 @@ def test_ivf_append_equals_one_shot_frozen_codebook_build(spark, tmp_path):
                  if d.startswith("centroid_id=")}
     valid = {f"centroid_id={c['cid']}" for c in cents}
     assert pre_dirs <= post_dirs <= valid
+
+
+def test_ivf_append_after_retrain_assigns_against_new_codebook(spark, tmp_path):
+    """ivf_append reads the codebook through the serving cache. After a
+    retrain (build_dense_ivf overwrite) the cache must not hand the
+    append the OLD codebook: every appended row lands in the cell the
+    NEW codebook picks for it, and in no cell the new codebook lacks."""
+    from pyspark.sql import functions as F
+
+    from semantik_spark.operators.serving import (
+        build_dense_ivf, dense_serve_ivf, ivf_append,
+    )
+    from semantik_spark.operators.similarity import _codebook_df, assign_cells
+    from semantik_spark.functions.vectors import mock_embedding
+
+    docs = spark.createDataFrame(
+        [(i, f"document about topic {i % 7} item {i}") for i in range(90)],
+        ["doc_id", "text"])
+    idx = str(tmp_path / "idx")
+    qdf = spark.createDataFrame([("q1", "topic 3 item")],
+                                ["query_id", "query_text"])
+    build_dense_ivf(docs.where("doc_id < 40"), idx, n_centroids=8)
+    dense_serve_ivf(spark, idx, qdf, k=3).collect()  # caches the codebook
+    old_cids = {int(r["cid"]) for r in spark.read.parquet(f"{idx}/codebook").collect()}
+
+    # retrain on a different slice: the seed ids (= cids) change
+    build_dense_ivf(docs.where("doc_id >= 40 AND doc_id < 80"), idx, n_centroids=4)
+    new_cents = sorted(
+        ({"cid": int(r["cid"]), "cv": list(r["cv"])}
+         for r in spark.read.parquet(f"{idx}/codebook").collect()),
+        key=lambda r: r["cid"])
+    assert {c["cid"] for c in new_cents}.isdisjoint(old_cids)
+
+    delta = docs.where("doc_id >= 80")
+    ivf_append(spark, idx, delta)
+    expect = {
+        r["doc_id"]: r["centroid_id"]
+        for r in assign_cells(
+            delta.select("doc_id", mock_embedding("text").alias("embedding")),
+            F.broadcast(_codebook_df(spark, new_cents)), "embedding",
+        ).collect()
+    }
+    stored = {r["doc_id"]: r["centroid_id"]
+              for r in spark.read.parquet(f"{idx}/dense_ivf")
+              .where("doc_id >= 80").collect()}
+    assert stored == expect
+    assert set(stored.values()) <= {c["cid"] for c in new_cents}
 
 
 def test_hybrid_serve_approx_full_width_equals_exact(spark, tmp_path):
@@ -479,6 +527,7 @@ def test_merge_sparse_append_replay_after_crash_before_swap(spark, tmp_path):
     attempt are removed) and a terms table equal to a full rebuild.
     The old order (swap first) made the replay a fenced no-op with the
     batch's postings permanently missing."""
+    from semantik_spark.functions import publish
     from semantik_spark.operators import serving
 
     docs = spark.createDataFrame(
@@ -489,21 +538,22 @@ def test_merge_sparse_append_replay_after_crash_before_swap(spark, tmp_path):
     delta = docs.where("doc_id >= 8")
 
     # crash AT the swap: postings + terms already written, marker not
-    real_swap = serving._bm25_state_swap
+    real_swap = publish.swap
     def exploding_swap(*a, **kw):
         raise RuntimeError("simulated crash before marker swap")
-    serving._bm25_state_swap = exploding_swap
+    publish.swap = exploding_swap
     try:
         import pytest as _pytest
         with _pytest.raises(RuntimeError, match="simulated crash"):
             serving.merge_sparse_append(delta, idx, batch_id=7)
     finally:
-        serving._bm25_state_swap = real_swap
-    assert serving._bm25_last_batch(idx) is None  # marker never advanced
+        publish.swap = real_swap
+    state = f"{idx}/bm25_state"
+    assert publish.last_batch(state) is None  # marker never advanced
 
     # the streaming replay re-runs the SAME batch — must converge
     serving.merge_sparse_append(delta, idx, batch_id=7)
-    assert serving._bm25_last_batch(idx) == 7
+    assert publish.last_batch(state) == 7
 
     post = spark.read.parquet(f"{idx}/postings")
     dup = (post.groupBy("doc_id", "term").count().where("count > 1").count())

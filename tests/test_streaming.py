@@ -819,41 +819,68 @@ def test_streaming_contingency_merge_equals_batch(spark, tmp_path):
 
 
 def test_state_replay_guard_and_reader_fallback(spark, tmp_path):
-    """The additive-sink replay protocol: a checkpoint replay (same
-    batch_id) must be a no-op instead of double-adding counts, and
-    readers must survive the between-renames crash window by falling
-    back to __old."""
+    """The additive-sink replay protocol (functions.publish): a
+    checkpoint replay (same batch_id) must be a no-op instead of
+    double-adding counts, and readers must survive the between-renames
+    crash window by falling back to __old. Run over both state layouts
+    the protocol publishes: a one-table sketch state and the two-table
+    bm25_state/{corpus,terms}."""
     import os
     import shutil
 
-    from semantik_spark.streaming.incremental import (
-        _last_merged_batch,
-        _served_state,
-        _swap_state,
-    )
-
-    state = str(tmp_path / "sk")
-    df1 = spark.createDataFrame([("a", 1, 3)], "g string, bucket int, n long")
-    _swap_state(df1, state, batch_id=0)
-    assert _last_merged_batch(state) == 0
-
-    # replay check: a sink seeing batch_id 0 again must skip
-    assert 0 <= _last_merged_batch(state)
-
-    df2 = spark.createDataFrame([("a", 1, 5)], "g string, bucket int, n long")
-    _swap_state(df2, state, batch_id=1)
-    assert _last_merged_batch(state) == 1
-    assert _served_state(spark, state).collect()[0]["n"] == 5
-
-    # crash window: state only at __old — reader must still serve,
-    # and the marker must still resolve
-    os.rename(state, state + "__old")
-    assert _served_state(spark, state).collect()[0]["n"] == 5
-    assert _last_merged_batch(state) == 1
-    shutil.rmtree(state + "__old")
     import pytest as _pytest
-    with _pytest.raises(FileNotFoundError, match="no sketch state"):
-        _served_state(spark, state)
+
+    from semantik_spark.functions import publish
+    from semantik_spark.streaming.incremental import _served_state
+
+    def one_table(df):
+        return df.write.mode("overwrite").parquet
+
+    def two_tables(df):
+        def write(tmp):
+            df.write.mode("overwrite").parquet(f"{tmp}/corpus")
+            df.write.mode("overwrite").parquet(f"{tmp}/terms")
+        return write
+
+    for name, sub, writer in (("sk", None, one_table),
+                              ("bm25_state", "terms", two_tables)):
+        state = str(tmp_path / name)
+
+        def served():
+            if sub is None:
+                return _served_state(spark, state)
+            return publish.read(spark, state, sub)
+
+        df1 = spark.createDataFrame([("a", 1, 3)], "g string, bucket int, n long")
+        publish.swap(state, writer(df1), batch_id=0)
+        assert publish.last_batch(state) == 0
+
+        # replay check: a sink seeing batch_id 0 again must skip
+        assert 0 <= publish.last_batch(state)
+
+        df2 = spark.createDataFrame([("a", 1, 5)], "g string, bucket int, n long")
+        publish.swap(state, writer(df2), batch_id=1)
+        assert publish.last_batch(state) == 1
+        assert served().collect()[0]["n"] == 5
+
+        # a writer without a batch id (exact rebuild, GDPR delete)
+        # carries the stream's marker forward
+        df3 = spark.createDataFrame([("a", 1, 6)], "g string, bucket int, n long")
+        publish.swap(state, writer(df3))
+        assert publish.last_batch(state) == 1
+        assert served().collect()[0]["n"] == 6
+
+        # crash window: state only at __old — reader must still serve,
+        # and the marker must still resolve
+        os.rename(state, state + "__old")
+        assert served().collect()[0]["n"] == 6
+        assert publish.last_batch(state) == 1
+        shutil.rmtree(state + "__old")
+        if sub is None:
+            with _pytest.raises(FileNotFoundError, match="no sketch state"):
+                _served_state(spark, state)
+        else:
+            assert publish.read(spark, state, sub) is None
 
 
 def test_merge_counters_null_keys_align(spark):
@@ -879,7 +906,7 @@ def test_merge_counters_null_keys_align(spark):
 
 
 def test_read_state_propagates_error_on_existing_unreadable_state(spark, tmp_path):
-    """_read_state must NOT treat a read failure on an EXISTING state
+    """publish.read must NOT treat a read failure on an EXISTING state
     dir as first-batch (that silently resets the sketch to the latest
     delta); only a genuinely-missing state returns None, and the __old
     crash-window fallback still applies."""
@@ -887,22 +914,22 @@ def test_read_state_propagates_error_on_existing_unreadable_state(spark, tmp_pat
 
     import pytest as _pytest
 
-    from semantik_spark.streaming.incremental import _read_state
+    from semantik_spark.functions import publish
 
     missing = str(tmp_path / "nope")
-    assert _read_state(spark, missing) is None
+    assert publish.read(spark, missing) is None
 
     corrupt = str(tmp_path / "state")
     os.makedirs(corrupt)
     with open(os.path.join(corrupt, "part-00000.parquet"), "w") as fh:
         fh.write("not parquet at all")
     with _pytest.raises(Exception):
-        _read_state(spark, corrupt)
+        publish.read(spark, corrupt)
 
     # crash-window fallback: __old holds the last good state
     good = spark.createDataFrame([("a", 1)], "g string, n long")
     good.write.mode("overwrite").parquet(corrupt + "__old")
-    rows = _read_state(spark, corrupt).collect()
+    rows = publish.read(spark, corrupt).collect()
     assert [(r["g"], r["n"]) for r in rows] == [("a", 1)]
 
 
@@ -943,18 +970,17 @@ def test_streaming_kmv_null_values_never_steal_slots(spark, tmp_path):
 def test_streaming_scd2_crash_at_swap_then_replay_converges(spark, tmp_path):
     """Kill-replay pin for the SCD2 writer family (VERDICT r11 item 5,
     the merge_sparse_append discipline): all merge work happens BEFORE
-    the _swap_state marker publish, so a crash AT the swap leaves the
+    the publish.swap marker publish, so a crash AT the swap leaves the
     old state + old marker intact and the checkpoint replay re-runs the
     whole merge — which must CONVERGE to the full-log rebuild, with no
     duplicate versions, and a further restart with no new data must be
     a fenced no-op."""
     import pytest as _pytest
 
+    from semantik_spark.functions import publish
     from semantik_spark.operators import scd
-    from semantik_spark.streaming import incremental
     from semantik_spark.streaming.incremental import (
-        _last_merged_batch, stream_files, streaming_scd2,
-        write_time_ordered_drop,
+        stream_files, streaming_scd2, write_time_ordered_drop,
     )
 
     base = str(tmp_path / "scd2")
@@ -980,24 +1006,24 @@ def test_streaming_scd2_crash_at_swap_then_replay_converges(spark, tmp_path):
             state, ckpt, "custkey", ["priority"], "ts", "seq")
 
     # crash AT the first swap: merge ran, marker/state never published
-    real_swap = incremental._swap_state
+    real_swap = publish.swap
 
     def exploding_swap(*a, **kw):
         raise RuntimeError("simulated crash at scd2 state swap")
 
-    incremental._swap_state = exploding_swap
+    publish.swap = exploding_swap
     try:
         q = _run()
         with _pytest.raises(Exception, match="simulated crash"):
             q.awaitTermination(120)
     finally:
-        incremental._swap_state = real_swap
-    assert _last_merged_batch(state) is None  # marker never advanced
+        publish.swap = real_swap
+    assert publish.last_batch(state) is None  # marker never advanced
 
     # restart through the SAME checkpoint: batch 0 replays, then batch 1
     q = _run()
     q.awaitTermination(120)
-    assert _last_merged_batch(state) == 1
+    assert publish.last_batch(state) == 1
 
     got = sorted(
         (r["custkey"], r["priority"], str(r["valid_from"]),
@@ -1013,7 +1039,7 @@ def test_streaming_scd2_crash_at_swap_then_replay_converges(spark, tmp_path):
     # a further restart with no new files is a fenced no-op
     q = _run()
     q.awaitTermination(120)
-    assert _last_merged_batch(state) == 1
+    assert publish.last_batch(state) == 1
     again = sorted(
         (r["custkey"], r["priority"], str(r["valid_from"]))
         for r in spark.read.parquet(state).collect())
@@ -1029,10 +1055,10 @@ def test_streaming_ddsketch_crash_at_swap_then_replay_converges(spark, tmp_path)
     over ALL rows, cell for cell."""
     import pytest as _pytest
 
+    from semantik_spark.functions import publish
     from semantik_spark.operators.sketches import ddsketch_buckets
-    from semantik_spark.streaming import incremental
     from semantik_spark.streaming.incremental import (
-        _last_merged_batch, stream_files, streaming_ddsketch,
+        stream_files, streaming_ddsketch,
     )
 
     base = str(tmp_path / "dds")
@@ -1049,28 +1075,28 @@ def test_streaming_ddsketch_crash_at_swap_then_replay_converges(spark, tmp_path)
                          max_files_per_trigger=1),
             state, ckpt, "g", "v", alpha=0.02)
 
-    real_swap = incremental._swap_state
+    real_swap = publish.swap
     calls = {"n": 0}
 
-    def swap_crashing_on_batch1(merged, state_path, batch_id=None):
+    def swap_crashing_on_batch1(state_path, write_fn, batch_id=None):
         if batch_id == 1:
             raise RuntimeError("simulated crash at ddsketch state swap")
-        return real_swap(merged, state_path, batch_id=batch_id)
+        return real_swap(state_path, write_fn, batch_id=batch_id)
 
-    incremental._swap_state = swap_crashing_on_batch1
+    publish.swap = swap_crashing_on_batch1
     try:
         q = _run()
         with _pytest.raises(Exception, match="simulated crash"):
             q.awaitTermination(120)
     finally:
-        incremental._swap_state = real_swap
+        publish.swap = real_swap
     # batch 0 published, batch 1's merge died before its swap
-    assert _last_merged_batch(state) == 0
+    assert publish.last_batch(state) == 0
 
     # restart: batch 1 replays and merges exactly once
     q = _run()
     q.awaitTermination(120)
-    assert _last_merged_batch(state) == 1
+    assert publish.last_batch(state) == 1
     got = sorted((r["g"], r["bucket"], r["n"])
                  for r in spark.read.parquet(state).collect())
     want = sorted((r["g"], r["bucket"], r["n"])
