@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from semantik_spark.config import BM25_B, BM25_K1
 from semantik_spark.functions.text import bm25_tokens
 from semantik_spark.functions.caching import cache
-from semantik_spark.functions.parallel import spread
+from semantik_spark.functions.ranking import topk
 
 
 def tokenize(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -274,49 +274,60 @@ def score(post: DataFrame, encoded_queries: DataFrame) -> DataFrame:
     )
 
 
+def _tokenized(docs: DataFrame, id_col: str, text_col: str,
+               tokenized: DataFrame | None) -> DataFrame:
+    """The in-one-run operators' corpus tokenize: ``tokenized`` when the
+    caller already holds one (an already-persisted tokenize() output it
+    also uses for its own purposes), else tokenize(docs) persisted. The
+    tokenized corpus feeds several consumers (corpus stats, term stats,
+    postings), so the regex tokenizer runs ONCE per doc instead of once
+    per consumer. In a deployed index the postings table is persisted
+    parquet and this whole prefix disappears (operators/serving.py)."""
+    # NO spread before the corpus tokenize (measured): only top-k rows
+    # survive these queries, so the tokenize is not the dominant cost
+    # and 32-way tiny-task stages cost more than they parallelize —
+    # bm25_search measured 3.56 -> 4.76 s median with the spread
+    # (interleaved 5-rep noop, sf0.1; tasks 68 -> 687). The
+    # full-postings paths (q_bm25_postings, serving.build_sparse),
+    # where the tf explode IS the cost, do spread — measured -45%.
+    return tokenized if tokenized is not None \
+        else cache(tokenize(docs, id_col=id_col, text_col=text_col))
+
+
+def _index(docs: DataFrame, id_col: str, text_col: str,
+           tokenized: DataFrame | None) -> tuple[DataFrame, DataFrame]:
+    """(terms, postings) built in one run over the _tokenized corpus."""
+    tok = _tokenized(docs, id_col, text_col, tokenized)
+    # terms/stats deliberately NOT persisted here (measured): the two
+    # terms subtrees (postings + query encoding) are independent stages
+    # of ONE job and run concurrently over the cached tok, so the
+    # duplicate vocab aggregation costs little wall — while a persist
+    # serializes materialize-then-read and measured +13-22% on every
+    # search-shaped query. rocchio_search (3+ consumers, two scoring
+    # passes) is where the persist wins.
+    stats = corpus_stats(tok)
+    terms = term_stats(tok, stats)
+    return terms, postings(tok, terms, stats)
+
+
+def _scores(docs: DataFrame, queries: DataFrame, id_col: str, text_col: str,
+            tokenized: DataFrame | None, keep: int | None) -> DataFrame:
+    """In-one-run BM25 branch: (query_id, doc_id, score) over the full
+    postings, or over pruned_postings(keep) when ``keep`` is set."""
+    terms, post = _index(docs, id_col, text_col, tokenized)
+    if keep is not None:
+        post = pruned_postings(post, keep=keep)
+    return score(post, encode_queries(queries, terms))
+
+
 def search(docs: DataFrame, queries: DataFrame, k: int = 10,
            id_col: str = "doc_id", text_col: str = "text",
            tokenized: DataFrame | None = None) -> DataFrame:
     """End-to-end BM25 top-k: query_id, doc_id, score, rank (1-based,
-    ties broken by doc_id for determinism).
-
-    The tokenized corpus feeds three consumers (corpus stats, term
-    stats, postings) — persist it so the regex tokenizer runs ONCE per
-    doc instead of 3×. In a deployed index the postings table is
-    persisted parquet and this whole prefix disappears; the persist
-    mirrors that materialization for build-and-query-in-one runs.
-    Callers that also tokenize for their own purposes pass ``tokenized``
-    (an already-persisted tokenize() output) to share the single pass.
-    """
-    from pyspark.sql import Window
-
-    # NO spread before the corpus tokenize here (r14, measured): only
-    # top-k rows survive this query, so the tokenize is not the
-    # dominant cost and 32-way tiny-task stages cost more than they
-    # parallelize — bm25_search measured 3.56 -> 4.76 s median with the
-    # spread (interleaved 5-rep noop, sf0.1; tasks 68 -> 687). The
-    # full-postings paths (q_bm25_postings, serving.build_sparse),
-    # where the tf explode IS the cost, do spread — measured -45%.
-    tok = tokenized if tokenized is not None \
-        else cache(tokenize(docs, id_col=id_col, text_col=text_col))
-    # terms/stats deliberately NOT persisted here (r13 measurement):
-    # the two terms subtrees (postings + query encoding) are
-    # independent stages of ONE job and run concurrently over the
-    # cached tok, so the duplicate vocab aggregation costs little wall
-    # — while a persist serializes materialize-then-read and measured
-    # +13-22% on every search-shaped query. rocchio_search (3+
-    # consumers, two scoring passes) is where the persist wins.
-    stats = corpus_stats(tok)
-    terms = term_stats(tok, stats)
-    post = postings(tok, terms, stats)
-    enc = encode_queries(queries, terms)
-    scored = score(post, enc)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    ties broken by doc_id for determinism). Callers that also tokenize
+    for their own purposes pass ``tokenized`` to share the single pass
+    (see _tokenized)."""
+    return topk(_scores(docs, queries, id_col, text_col, tokenized, None), k)
 
 
 def pruned_postings(post: DataFrame, keep: int = 32) -> DataFrame:
@@ -352,27 +363,7 @@ def pruned_search(docs: DataFrame, queries: DataFrame, k: int = 10,
     (cut term contributions), ranks shift accordingly. Callers choose
     ``keep`` from measured recall (the pruning analogue of the IVF
     nprobe sweep)."""
-    # NO spread before the corpus tokenize here (r14, measured): only
-    # top-k rows survive this query, so the tokenize is not the
-    # dominant cost and 32-way tiny-task stages cost more than they
-    # parallelize — bm25_search measured 3.56 -> 4.76 s median with the
-    # spread (interleaved 5-rep noop, sf0.1; tasks 68 -> 687). The
-    # full-postings paths (q_bm25_postings, serving.build_sparse),
-    # where the tf explode IS the cost, do spread — measured -45%.
-    tok = tokenized if tokenized is not None \
-        else cache(tokenize(docs, id_col=id_col, text_col=text_col))
-    # terms/stats not persisted — same trade as search() (see there)
-    stats = corpus_stats(tok)
-    terms = term_stats(tok, stats)
-    post = pruned_postings(postings(tok, terms, stats), keep=keep)
-    enc = encode_queries(queries, terms)
-    scored = score(post, enc)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return topk(_scores(docs, queries, id_col, text_col, tokenized, keep), k)
 
 
 def rocchio_search(docs: DataFrame, queries: DataFrame, k: int = 10,
@@ -404,31 +395,16 @@ def rocchio_search(docs: DataFrame, queries: DataFrame, k: int = 10,
     one more broadcast score pass with ≤ fb_terms extra terms per
     query. No corpus rescan anywhere.
     """
-    from pyspark.sql import Window
-
-    # NO spread before the corpus tokenize here (r14, measured): only
-    # top-k rows survive this query, so the tokenize is not the
-    # dominant cost and 32-way tiny-task stages cost more than they
-    # parallelize — bm25_search measured 3.56 -> 4.76 s median with the
-    # spread (interleaved 5-rep noop, sf0.1; tasks 68 -> 687). The
-    # full-postings paths (q_bm25_postings, serving.build_sparse),
-    # where the tf explode IS the cost, do spread — measured -45%.
-    tok = tokenized if tokenized is not None \
-        else cache(tokenize(docs, id_col=id_col, text_col=text_col))
+    tok = _tokenized(docs, id_col, text_col, tokenized)
     # terms feeds postings + BOTH query encodings; stats feeds terms +
-    # postings — same two-consumer sharing as search() (see its
-    # comment). post was already persisted across the two passes.
+    # postings, and post is read by both scoring passes and the
+    # feedback mining — unlike _index's single pass, persisting all
+    # three wins here.
     stats = cache(corpus_stats(tok))
     terms = cache(term_stats(tok, stats))
     post = cache(postings(tok, terms, stats))
     enc = encode_queries(queries, terms)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    fb = (
-        score(post, enc)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= fb_docs)
-        .select("query_id", "doc_id")
-    )
+    fb = topk(score(post, enc), fb_docs).select("query_id", "doc_id")
     wexp = Window.partitionBy("query_id").orderBy(
         F.desc("_mu"), F.asc("term"))
     expn = (
@@ -447,13 +423,7 @@ def rocchio_search(docs: DataFrame, queries: DataFrame, k: int = 10,
              / F.lit(float(fb_docs))).alias("q_weight"),
         )
     )
-    enc2 = enc.unionByName(expn)
-    return (
-        score(post, enc2)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return topk(score(post, enc.unionByName(expn)), k)
 
 
 def lm_dirichlet_search(docs: DataFrame, queries: DataFrame, k: int = 10,
@@ -484,17 +454,7 @@ def lm_dirichlet_search(docs: DataFrame, queries: DataFrame, k: int = 10,
     so a deployed index serves both models from one postings layout
     plus a vocab-sized cf sidecar.
     """
-    from pyspark.sql import Window
-
-    # NO spread before the corpus tokenize here (r14, measured): only
-    # top-k rows survive this query, so the tokenize is not the
-    # dominant cost and 32-way tiny-task stages cost more than they
-    # parallelize — bm25_search measured 3.56 -> 4.76 s median with the
-    # spread (interleaved 5-rep noop, sf0.1; tasks 68 -> 687). The
-    # full-postings paths (q_bm25_postings, serving.build_sparse),
-    # where the tf explode IS the cost, do spread — measured -45%.
-    tok = tokenized if tokenized is not None \
-        else cache(tokenize(docs, id_col=id_col, text_col=text_col))
+    tok = _tokenized(docs, id_col, text_col, tokenized)
     tf = (
         tok.select("doc_id", "doc_len", F.explode("tokens").alias("term"))
         .groupBy("doc_id", "doc_len", "term")
@@ -537,12 +497,7 @@ def lm_dirichlet_search(docs: DataFrame, queries: DataFrame, k: int = 10,
          + F.col("qlen") * F.log(mu_l / (F.col("doc_len") + mu_l)))
         .alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return topk(scored, k)
 
 
 def more_like_this(docs: DataFrame, seed_pred, k: int = 10, top_terms: int = 16,
@@ -562,19 +517,7 @@ def more_like_this(docs: DataFrame, seed_pred, k: int = 10, top_terms: int = 16,
 
     Returns (seed_id, doc_id, score, rank).
     """
-    from pyspark.sql import Window
-
-    # NO spread before the corpus tokenize here (r14, measured): only
-    # top-k rows survive this query, so the tokenize is not the
-    # dominant cost and 32-way tiny-task stages cost more than they
-    # parallelize — bm25_search measured 3.56 -> 4.76 s median with the
-    # spread (interleaved 5-rep noop, sf0.1; tasks 68 -> 687). The
-    # full-postings paths (q_bm25_postings, serving.build_sparse),
-    # where the tf explode IS the cost, do spread — measured -45%.
-    tok = tokenized if tokenized is not None \
-        else cache(tokenize(docs, id_col=id_col, text_col=text_col))
-    stats = corpus_stats(tok)
-    post = postings(tok, term_stats(tok, stats), stats)
+    _, post = _index(docs, id_col, text_col, tokenized)
     wt = Window.partitionBy("doc_id").orderBy(F.desc("weight"), F.asc("term"))
     seed_terms = (
         post.where(seed_pred)

@@ -25,7 +25,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from semantik_spark.operators import bm25
-from semantik_spark.operators.search import mock_dense_search, rrf_fuse
+from semantik_spark.operators.search import (
+    dense_scores, doc_embeddings, query_embeddings, rrf_fuse,
+)
 
 # apostrophe-free on purpose: the template is inlined into oracle SQL
 HYDE_TEMPLATE = "Relevant passage: {q}. Key facts about {q} include definitions, examples, and applications."
@@ -59,14 +61,11 @@ def hyde_hybrid_search(docs: DataFrame, queries: DataFrame, k: int = 10,
                        id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Hybrid search with HyDE split (search_service.py:470-479):
     dense branch embeds the hypothetical passage, sparse branch encodes
-    the original query, RRF fuses."""
+    the original query, search.rrf_fuse fuses the raw branch scores."""
     if search_k is None:
         search_k = max(k * 2, 20)
     expanded = expand_queries(queries, generator)
-    dense = mock_dense_search(
-        docs, expanded.select("query_id", "dense_query_text"),
-        k=search_k, id_col=id_col, text_col=text_col,
-        query_text_col="dense_query_text",
-    )
-    sparse = bm25.search(docs, queries, k=search_k, id_col=id_col, text_col=text_col)
-    return rrf_fuse(dense, sparse, k=k)
+    dense = dense_scores(doc_embeddings(docs, id_col, text_col),
+                         query_embeddings(expanded, query_text_col="dense_query_text"))
+    sparse = bm25._scores(docs, queries, id_col, text_col, None, None)
+    return rrf_fuse(dense, sparse, k, search_k)

@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from semantik_spark.functions.caching import checkpoint
+from semantik_spark.functions.ranking import topk
 
 from semantik_spark.config import (
     RERANK_CANDIDATE_MAX,
@@ -98,12 +99,8 @@ def rerank(candidates: DataFrame, queries: DataFrame, docs: DataFrame, k: int = 
         F.broadcast(queries.select("query_id", "query_text")), "query_id"
     )
     scored = with_q.withColumn("rerank_score", score_fn(F.col("query_text"), F.col("text")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("rerank_score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    return topk(scored, k, "rerank_score") \
         .select("query_id", "doc_id", "rerank_score", "rank")
-    )
 
 
 def search_with_rerank(docs: DataFrame, queries: DataFrame, k: int = 10,

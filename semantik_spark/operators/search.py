@@ -2,12 +2,17 @@
 
 Mirrors the reference's perform_search operator tree
 (vecpipe/search/service.py:73-408):
-  dense branch  — embed query → cosine top-search_k      (here: mock or
+  dense branch  — embed query → cosine scores            (here: mock or
                   model embedder; brute-force exact kNN v1, ANN later)
-  sparse branch — BM25 encode → dot-product top-search_k
-  fuse          — RRF full-outer rank join, rrf_k=60
+  sparse branch — BM25 encode → dot-product scores
+  fuse          — single-exchange RRF over both branches' raw scores,
+                  RRF_K = 60, each branch cut at search_k
                   (sparse_search.py:21-63)
   filters       — score_threshold (service.py:337-347), doc_id guard
+
+The persisted serve paths (operators/serving.py) compose the same
+stages: doc_embeddings / query_embeddings, dense_scores, rrf_fuse and
+the per-query top-k (functions/ranking.topk).
 
 Scale notes: the query side is always tiny → broadcast; the corpus scan
 is one pass, filter/projection pushed to parquet; top-k per query is a
@@ -22,34 +27,49 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from semantik_spark.config import RRF_K
+from semantik_spark.functions.ranking import topk
 from semantik_spark.functions.vectors import cosine, mock_embedding
 from semantik_spark.operators import bm25
 from semantik_spark.functions.caching import cache, checkpoint
 
 
-def _topk(scored: DataFrame, k: int, score_col: str = "score") -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(F.desc(score_col), F.asc("doc_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+def doc_embeddings(docs: DataFrame, id_col: str = "doc_id",
+                   text_col: str = "text",
+                   extra_cols: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_id, embedding, *extra_cols) — the one doc-embedding select
+    every dense path reads or writes (mock_dense_search, hybrid_search,
+    and the persisted dense/, dense_ivf/ and streaming dense_log/), so
+    build, append and serve embed alike."""
+    return docs.select(
+        F.col(id_col).alias("doc_id"),
+        mock_embedding(text_col).alias("embedding"),
+        *extra_cols,
+    )
 
 
-def dense_scores(index: DataFrame, queries: DataFrame,
-                 embedding_col: str = "embedding",
-                 query_vec_col: str = "query_vec") -> DataFrame:
+def query_embeddings(queries: DataFrame, query_id_col: str = "query_id",
+                     query_text_col: str = "query_text") -> DataFrame:
+    """(query_id, query_vec) — doc_embeddings' query-side twin."""
+    return queries.select(
+        F.col(query_id_col).alias("query_id"),
+        mock_embedding(query_text_col).alias("query_vec"),
+    )
+
+
+def dense_scores(index: DataFrame, queries: DataFrame) -> DataFrame:
     """Flat dense branch: (query_id, doc_id, score = cosine) for every
     (query, doc) pair. ``index`` carries (doc_id, embedding);
     ``queries`` carries (query_id, query_vec). Queries are broadcast;
     scoring is whole-stage-codegen zip_with/aggregate — no shuffle."""
     return index.crossJoin(F.broadcast(queries)).select(
-        "query_id", "doc_id", cosine(embedding_col, query_vec_col).alias("score"),
+        "query_id", "doc_id", cosine("embedding", "query_vec").alias("score"),
     )
 
 
-def dense_search(index: DataFrame, queries: DataFrame, k: int = 10,
-                 embedding_col: str = "embedding",
-                 query_vec_col: str = "query_vec") -> DataFrame:
+def dense_search(index: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Brute-force exact cosine kNN: query_id, doc_id, score, rank —
     dense_scores, then the per-query top-k window."""
-    return _topk(dense_scores(index, queries, embedding_col, query_vec_col), k)
+    return topk(dense_scores(index, queries), k)
 
 
 def mock_dense_search(docs: DataFrame, queries: DataFrame, k: int = 10,
@@ -59,40 +79,51 @@ def mock_dense_search(docs: DataFrame, queries: DataFrame, k: int = 10,
     """Dense search with the reference's deterministic mock embedder
     (dense_search.py:19-44) applied to both sides — the model-free test
     mode, fully reproducible in the DuckDB oracle."""
-    index = docs.select(
-        F.col(id_col).alias("doc_id"), mock_embedding(text_col).alias("embedding")
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        mock_embedding(query_text_col).alias("query_vec"),
-    )
-    return dense_search(index, q, k)
+    return dense_search(doc_embeddings(docs, id_col, text_col),
+                        query_embeddings(queries, query_id_col, query_text_col), k)
 
 
-def rrf_fuse(dense: DataFrame, sparse: DataFrame, k: int = 10, rrf_k: int = RRF_K) -> DataFrame:
-    """Reciprocal Rank Fusion (sparse_search.py:21-63): full outer join
-    of the two ranked lists on (query_id, doc_id);
-    score = Σ 1/(rrf_k + rank_branch); keeps per-branch diagnostics."""
-    d = dense.select(
-        "query_id", "doc_id",
-        F.col("rank").alias("dense_rank"), F.col("score").alias("dense_score"),
+def rrf_fuse(dense: DataFrame, sparse: DataFrame, k: int,
+             search_k: int) -> DataFrame:
+    """Reciprocal Rank Fusion (sparse_search.py:21-63) of two RAW
+    (query_id, doc_id, score) branch tables: each branch is ranked per
+    query (score DESC, doc_id ASC) and cut at ``search_k``;
+    score = Σ 1/(RRF_K + rank_branch) over the branches that ranked the
+    doc; returns the top ``k`` per query with per-branch diagnostics
+    (dense_rank, sparse_rank, dense_score, sparse_score — NULL where a
+    branch did not rank the doc) and NULL doc ids dropped (F5 guard).
+
+    One exchange: both branches' scores union with a branch tag, ONE
+    window ranks per (query, branch), and the fusion is a groupBy pivot
+    over the ≤ 2·|queries|·search_k surviving rows — never a join of
+    two separately shuffled ranked lists. A (query, doc) group holds
+    exactly the branches that ranked it, so the max(when(branch=…))
+    pivot yields the NULL pattern of a full outer join of the two
+    ranked lists."""
+    u = dense.select(F.lit(0).alias("branch"), "query_id", "doc_id", "score") \
+        .unionByName(sparse.select(F.lit(1).alias("branch"),
+                                   "query_id", "doc_id", "score"))
+    wb = Window.partitionBy("query_id", "branch").orderBy(
+        F.desc("score"), F.asc("doc_id")
     )
-    s = sparse.select(
-        "query_id", "doc_id",
-        F.col("rank").alias("sparse_rank"), F.col("score").alias("sparse_score"),
-    )
+    ranked = u.withColumn("rank", F.row_number().over(wb)) \
+        .where(F.col("rank") <= search_k)
     fused = (
-        d.join(s, ["query_id", "doc_id"], "full_outer")
+        ranked.groupBy("query_id", "doc_id")
+        .agg(
+            F.max(F.when(F.col("branch") == 0, F.col("rank"))).alias("dense_rank"),
+            F.max(F.when(F.col("branch") == 0, F.col("score"))).alias("dense_score"),
+            F.max(F.when(F.col("branch") == 1, F.col("rank"))).alias("sparse_rank"),
+            F.max(F.when(F.col("branch") == 1, F.col("score"))).alias("sparse_score"),
+        )
         .withColumn(
             "score",
-            F.coalesce(1.0 / (F.lit(rrf_k) + F.col("dense_rank")), F.lit(0.0))
-            + F.coalesce(1.0 / (F.lit(rrf_k) + F.col("sparse_rank")), F.lit(0.0)),
+            F.coalesce(1.0 / (F.lit(RRF_K) + F.col("dense_rank")), F.lit(0.0))
+            + F.coalesce(1.0 / (F.lit(RRF_K) + F.col("sparse_rank")), F.lit(0.0)),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
-        fused.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        topk(fused, k).where(F.col("doc_id").isNotNull())
         .select("query_id", "doc_id", "score", "rank",
                 "dense_rank", "sparse_rank", "dense_score", "sparse_score")
     )
@@ -103,15 +134,17 @@ def hybrid_search(docs: DataFrame, queries: DataFrame, k: int = 10,
                   score_threshold: float | None = None,
                   id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """The composed hybrid query path (service.py:73-408) in test mode:
-    mock-dense + BM25-sparse → RRF → optional threshold filter."""
+    mock-dense + BM25-sparse scores → rrf_fuse → optional threshold
+    filter."""
     if search_k is None:
         search_k = max(k * 2, 20)
-    dense = mock_dense_search(docs, queries, k=search_k, id_col=id_col, text_col=text_col)
-    sparse = bm25.search(docs, queries, k=search_k, id_col=id_col, text_col=text_col)
-    fused = rrf_fuse(dense, sparse, k=k)
+    dense = dense_scores(doc_embeddings(docs, id_col, text_col),
+                         query_embeddings(queries))
+    sparse = bm25._scores(docs, queries, id_col, text_col, None, None)
+    fused = rrf_fuse(dense, sparse, k, search_k)
     if score_threshold is not None:
         fused = fused.where(F.col("score") >= score_threshold)  # F3
-    return fused.where(F.col("doc_id").isNotNull())  # F5 guard
+    return fused
 
 
 def weighted_fusion(dense: DataFrame, sparse: DataFrame, k: int = 10,
@@ -124,9 +157,9 @@ def weighted_fusion(dense: DataFrame, sparse: DataFrame, k: int = 10,
     Ranking happens on the 6-dp-ROUNDED fused score (doc_id tiebreak)
     so the cut is engine-portable.
 
-    Same plan shape as rrf_fuse: two candidate-list windows (top-k-
-    sized partitions), one full-outer join, one rank window — nothing
-    corpus-scale after the branch searches."""
+    Plan shape: two candidate-list windows (top-k-sized partitions),
+    one full-outer join, one rank window — nothing corpus-scale after
+    the branch searches."""
     wq = Window.partitionBy("query_id")
 
     def _norm(df: DataFrame, prefix: str) -> DataFrame:
@@ -220,7 +253,7 @@ def maxsim_rerank(docs: DataFrame, queries: DataFrame, k: int = 5,
         terms.groupBy("query_id", "doc_id")
         .agg(F.round(F.sum("term"), 6).cast("double").alias("score"))
     )
-    return _topk(scored, k)
+    return topk(scored, k)
 
 
 def mmr_diversify(candidates: DataFrame, k: int = 8,
@@ -797,23 +830,14 @@ def ltr_features(docs: DataFrame, queries: DataFrame, k: int = 20,
     # every posting row once more
     post = bm25.postings(tok, terms, stats)
     enc = bm25.encode_queries(queries, terms)
-    scored = bm25.score(post, enc)
-    wb = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                                F.asc("doc_id"))
-    btop = (
-        scored.withColumn("bm25_rank", F.row_number().over(wb))
-        .where(F.col("bm25_rank") <= k)
-    )
+    btop = topk(bm25.score(post, enc), k).withColumnRenamed("rank", "bm25_rank")
     emb = cache(docs.select(F.col(id_col).alias("doc_id"),
                             mock_embedding(text_col).alias("e")))
     # the dense branch scores against the SAME cached embedding table
     # the candidate cosine below reads (mock_dense_search would rebuild
     # an identical mock_embedding scan of the corpus from scratch)
-    dtop = dense_search(
-        emb.select("doc_id", F.col("e").alias("embedding")),
-        queries.select(F.col("query_id"),
-                       mock_embedding("query_text").alias("query_vec")),
-        k)
+    qv = query_embeddings(queries)
+    dtop = dense_search(emb.select("doc_id", F.col("e").alias("embedding")), qv, k)
     cand = (
         btop.select("query_id", "doc_id")
         .unionByName(dtop.select("query_id", "doc_id"))
@@ -827,12 +851,10 @@ def ltr_features(docs: DataFrame, queries: DataFrame, k: int = 20,
              F.sum(F.round("idf", 9).cast("decimal(20,9)"))
              .cast("decimal(28,9)").alias("sum_idf"))
     )
-    qv = queries.select(F.col("query_id"),
-                        mock_embedding("query_text").alias("qe"))
     cos = (
         cand.join(emb, "doc_id")
         .join(F.broadcast(qv), "query_id")
-        .select("query_id", "doc_id", cosine("e", "qe").alias("cosine"))
+        .select("query_id", "doc_id", cosine("e", "query_vec").alias("cosine"))
     )
     dl = tok.select("doc_id", F.size("tokens").cast("bigint").alias("doc_len"))
     return (

@@ -3,13 +3,15 @@
 The reference separates indexing (celery pipeline writing Qdrant
 collections, vecpipe worker) from serving (search service querying the
 persisted index, vecpipe/search/service.py:73-408). The in-one-run
-search operators (bm25.search, search.hybrid_search) rebuild the index
-per query — right for correctness oracles, wrong for latency claims.
-This module materializes the index once as parquet tables and serves
-queries against the persisted artifacts.
+search operators (bm25.search, search.hybrid_search,
+similarity.knn_ivfpq) build their index inside the query — right for
+correctness oracles, wrong for latency claims. This module
+materializes the index once as parquet tables and serves queries
+against the persisted artifacts, composing the SAME stage functions
+the in-one-run operators use, so each stage has one implementation.
 
-Serve paths (every top-k is search._topk: per-query window, score
-DESC, doc_id ASC):
+Serve paths (every top-k is functions.ranking.topk: per-query window,
+score DESC, id ASC):
 
   bm25_serve           BM25 branch over postings/.
   dense_serve          flat dense branch over dense/; an optional
@@ -25,16 +27,22 @@ DESC, doc_id ASC):
 
 Shared stages they are composed of (one implementation each):
 
+  functions.ranking.topk     per-query top-k
+  search.rrf_fuse            single-exchange RRF fusion of two branches
+  search.doc_embeddings      the doc-embedding select of dense/,
+                             dense_ivf/ and the streaming dense_log/
+  search.query_embeddings    its query-side twin
+  search.dense_scores        flat cosine scoring
+  similarity.assign_cells    IVF cell assignment (build + append)
+  similarity.assign_residual IVFADC coarse assignment + residual
+  similarity.pq_subspaces    PQ codebook grouped by subspace
+  similarity.exact_rescore   phase-2 exact rescore of ANN candidates
   _bm25_scores         encode queries against terms/, score postings
-  _flat_dense_scores   embed queries, search.dense_scores over dense/
+  _flat_dense_scores   embed queries, dense_scores over dense/
   _ivf_dense_scores    plan probes, score the probed dense_ivf/ cells
   _plan_probes         driver-side nprobe nearest cells per query
-  _rrf_union_fuse      single-exchange RRF fusion of two branches
   _load_codebook       cached codebook sidecar read (serve + ivf_append)
   _write_codebook      codebook sidecar write (both IVF builds)
-  doc_embeddings       the doc-embedding select of dense/, dense_ivf/
-                       and the streaming dense_log/
-  similarity.assign_cells  IVF cell assignment (build + append)
   functions.publish    crash-safe bm25_state publish + replay marker
 
 Build and sync: build_index (= build_sparse + dense/), build_dense_ivf,
@@ -55,10 +63,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from semantik_spark.functions import publish
-from semantik_spark.functions.vectors import cosine, mock_embedding
-from semantik_spark.operators import bm25, search
+from semantik_spark.functions.ranking import topk
+from semantik_spark.functions.vectors import cosine
+from semantik_spark.operators import bm25
+from semantik_spark.operators.search import (
+    dense_scores, doc_embeddings, query_embeddings, rrf_fuse,
+)
 from semantik_spark.operators.similarity import (
-    _codebook_df, assign_cells, ivf_centroids, ivf_refine,
+    _codebook_df, _l2, _pq_codebook_df, assign_cells, assign_residual,
+    exact_rescore, ivf_centroids, ivf_refine, pq_codebooks, pq_subspaces,
 )
 from semantik_spark.plans.predicates import compile_predicate
 from semantik_spark.functions.caching import cache, checkpoint
@@ -116,14 +129,20 @@ def build_sparse(docs: DataFrame, path: str,
 
 
 def _publish_bm25_state(path: str, corpus: DataFrame, terms: DataFrame,
-                        batch_id: int | None = None) -> None:
+                        batch_id: int | None = None,
+                        retracted: DataFrame | None = None) -> None:
     """Publish the mergeable BM25 stats as {path}/bm25_state/{corpus,
     terms} in one publish.swap — a crash can never leave n_docs
-    including a batch whose df is missing."""
+    including a batch whose df is missing. ``retracted`` (doc_id) is
+    delete_from_index's retraction record, published with the stats it
+    describes as bm25_state/retracted; every other publish drops it."""
     def write(tmp: str) -> None:
         concurrently(
             lambda: corpus.write.mode("overwrite").parquet(f"{tmp}/corpus"),
             lambda: terms.write.mode("overwrite").parquet(f"{tmp}/terms"),
+            *([] if retracted is None else [
+                lambda: retracted.write.mode("overwrite")
+                                 .parquet(f"{tmp}/retracted")]),
         )
 
     publish.swap(f"{path}/bm25_state", write, batch_id)
@@ -257,19 +276,6 @@ def merge_dense_append(delta_docs: DataFrame, path: str,
         .write.mode("append").parquet(f"{path}/dense")
 
 
-def doc_embeddings(docs: DataFrame, id_col: str = "doc_id",
-                   text_col: str = "text",
-                   extra_cols: tuple[str, ...] = ()) -> DataFrame:
-    """(doc_id, embedding, *extra_cols) — the one doc-embedding select
-    every dense artifact is written from (dense/, dense_ivf/, and the
-    streaming dense_log/), so build, append and serve embed alike."""
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        mock_embedding(text_col).alias("embedding"),
-        *extra_cols,
-    )
-
-
 def build_index(docs: DataFrame, path: str,
                 id_col: str = "doc_id", text_col: str = "text",
                 payload_cols: tuple[str, ...] = ()) -> None:
@@ -303,8 +309,9 @@ def _flat_dense_scores(spark: SparkSession, path: str, queries: DataFrame,
                        predicate: dict | None = None,
                        query_id_col: str = "query_id",
                        query_text_col: str = "query_text") -> DataFrame:
-    """Flat dense branch: embed the queries and broadcast them against
-    the persisted embedding table (search.dense_scores). A payload
+    """Flat dense branch: embed the queries (search.query_embeddings)
+    and broadcast them against the persisted embedding table
+    (search.dense_scores). A payload
     ``predicate`` compiles to a Column (plans/predicates.py) applied to
     the scan BEFORE scoring, so equality/range terms on payload columns
     reach the parquet reader as PushedFilters (plan-asserted) — ranking
@@ -313,18 +320,14 @@ def _flat_dense_scores(spark: SparkSession, path: str, queries: DataFrame,
     index = spark.read.parquet(f"{path}/dense")
     if predicate is not None:
         index = index.where(compile_predicate(predicate))
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        mock_embedding(query_text_col).alias("query_vec"),
-    )
-    return search.dense_scores(index, q)
+    return dense_scores(index, query_embeddings(queries, query_id_col, query_text_col))
 
 
 def bm25_serve(spark: SparkSession, path: str, queries: DataFrame,
                k: int = 10) -> DataFrame:
     """BM25 top-k against the persisted index: query_id, doc_id, score,
     rank."""
-    return search._topk(_bm25_scores(spark, path, queries), k)
+    return topk(_bm25_scores(spark, path, queries), k)
 
 
 def dense_serve(spark: SparkSession, path: str, queries: DataFrame,
@@ -333,7 +336,7 @@ def dense_serve(spark: SparkSession, path: str, queries: DataFrame,
                 query_text_col: str = "query_text") -> DataFrame:
     """Dense top-k against the persisted embedding table, optionally
     payload-filtered by ``predicate`` (F2 ∘ W2, see _flat_dense_scores)."""
-    return search._topk(_flat_dense_scores(
+    return topk(_flat_dense_scores(
         spark, path, queries, predicate, query_id_col, query_text_col), k)
 
 
@@ -341,56 +344,11 @@ def hybrid_serve(spark: SparkSession, path: str, queries: DataFrame,
                  k: int = 10, search_k: int | None = None) -> DataFrame:
     """Hybrid RRF against the persisted index — the deployed composed
     query path (service.py:73-408 minus the per-request model calls):
-    the flat dense and BM25 branches through _rrf_union_fuse."""
+    the flat dense and BM25 branches through search.rrf_fuse."""
     if search_k is None:
         search_k = max(k * 2, 20)
-    return _rrf_union_fuse(_flat_dense_scores(spark, path, queries),
-                           _bm25_scores(spark, path, queries), k, search_k)
-
-
-def _rrf_union_fuse(dscored: DataFrame, sscored: DataFrame,
-                    k: int, search_k: int) -> DataFrame:
-    """Single-exchange RRF fusion of two raw score tables (r6 latency
-    work): instead of ranking each branch in its own sort-shuffle and
-    FULL-OUTER-joining the two ranked lists (3 exchanges of scored
-    rows), both branches' raw scores union with a branch tag, ONE
-    window ranks per (query, branch), and the join becomes a groupBy
-    pivot over the ≤ 2·|queries|·search_k surviving rows. Row-identical
-    to rrf_fuse(dense_ranked, sparse_ranked): a (query, doc) group
-    holds exactly the branches that scored it, so the
-    max(when(branch=…)) pivot reproduces the outer join's NULL pattern,
-    and ranks/ties order identically (score DESC, doc_id ASC)."""
-    from pyspark.sql import Window
-
-    u = dscored.select(F.lit(0).alias("branch"), "query_id", "doc_id", "score") \
-        .unionByName(sscored.select(F.lit(1).alias("branch"),
-                                    "query_id", "doc_id", "score"))
-    wb = Window.partitionBy("query_id", "branch").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    ranked = u.withColumn("rank", F.row_number().over(wb)) \
-        .where(F.col("rank") <= search_k)
-    fused = (
-        ranked.groupBy("query_id", "doc_id")
-        .agg(
-            F.max(F.when(F.col("branch") == 0, F.col("rank"))).alias("dense_rank"),
-            F.max(F.when(F.col("branch") == 0, F.col("score"))).alias("dense_score"),
-            F.max(F.when(F.col("branch") == 1, F.col("rank"))).alias("sparse_rank"),
-            F.max(F.when(F.col("branch") == 1, F.col("score"))).alias("sparse_score"),
-        )
-        .withColumn(
-            "score",
-            F.coalesce(1.0 / (F.lit(search.RRF_K) + F.col("dense_rank")), F.lit(0.0))
-            + F.coalesce(1.0 / (F.lit(search.RRF_K) + F.col("sparse_rank")), F.lit(0.0)),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        fused.withColumn("rank", F.row_number().over(wq))
-        .where((F.col("rank") <= k) & F.col("doc_id").isNotNull())
-        .select("query_id", "doc_id", "score", "rank",
-                "dense_rank", "sparse_rank", "dense_score", "sparse_score")
-    )
+    return rrf_fuse(_flat_dense_scores(spark, path, queries),
+                    _bm25_scores(spark, path, queries), k, search_k)
 
 
 def build_dense_ivf(docs: DataFrame, path: str, n_centroids: int = 16,
@@ -604,7 +562,7 @@ def dense_serve_ivf(spark: SparkSession, path: str, queries: DataFrame,
                     query_text_col: str = "query_text") -> DataFrame:
     """Dense top-k against the partitioned IVF index (_ivf_dense_scores,
     optionally payload-filtered by ``predicate``)."""
-    return search._topk(_ivf_dense_scores(
+    return topk(_ivf_dense_scores(
         spark, path, queries, nprobe, predicate, query_id_col, query_text_col), k)
 
 
@@ -641,10 +599,6 @@ def write_ivfpq_index(corpus: DataFrame, path: str, dim: int = 64,
     only per-vector state the ADC scan touches (dim/8 of the raw
     bytes at m=8,dim=64 float64), partition-pruned to probed cells.
     """
-    from semantik_spark.operators.similarity import (
-        _l2, _pq_codebook_df, pq_codebooks,
-    )
-
     d = dim // m
     spark = corpus.sparkSession
     # train_sample_mod: both codebooks (coarse + PQ) train on the
@@ -665,22 +619,9 @@ def write_ivfpq_index(corpus: DataFrame, path: str, dim: int = 64,
     # knn_ivfpq_serve regressed 8.4 → 20.9 s median. At production
     # partition counts the repartition is a no-op anyway; the training
     # sums' scale safety is the order-margin audit's proof.
-    # coarse assign + residual in one pass — same expression as
-    # similarity.knn_ivfpq so the stored cell is the one it would pick
-    best = F.array_max(F.transform(
-        F.col("cents"),
-        lambda ct: F.struct(
-            cosine(F.col("v"), ct["cv"]).alias("cos"),
-            (-ct["cid"]).alias("negcid"),
-            ct["cv"].alias("cv"),
-        ),
-    ))
-    assigned = c.crossJoin(codebook).select(
-        "vec_id", "v",
-        (-best["negcid"]).alias("centroid_id"),
-        F.zip_with("v", best["cv"], lambda a, b: a - b).alias("residual"),
-    )
-    assigned = cache(assigned)
+    # coarse assign + residual: the same similarity.assign_residual as
+    # knn_ivfpq, so the stored cell is the one it would pick
+    assigned = cache(assign_residual(c, codebook).drop("ccv"))
     book = pq_codebooks(assigned, dim=dim, m=m, n_centroids=pq_centroids,
                         refine_iters=refine_iters,
                         id_col="vec_id", vec_col="residual",
@@ -703,13 +644,9 @@ def write_ivfpq_index(corpus: DataFrame, path: str, dim: int = 64,
         "vec_id", "centroid_id",
         F.array(*[code_at(s) for s in range(m)]).alias("codes"),
     )
-    by_s: dict[int, list] = {}
-    for b in book:
-        by_s.setdefault(int(b["s"]), []).append((int(b["cid"]), b["cv"]))
-    pq_rows = []
-    for s, lst in sorted(by_s.items()):
-        for pos, (cid, cv) in enumerate(sorted(lst, key=lambda t: t[0])):
-            pq_rows.append((s, pos, cid, [float(x) for x in cv]))
+    pq_rows = [(s, pos, cid, cv)
+               for s, lst in enumerate(pq_subspaces(book, m))
+               for pos, (cid, cv) in enumerate(lst)]
     # the four artifacts are independent (codes reads the cached
     # assignment, full the raw scan, both codebooks are driver-local) —
     # overlap the writes (guide §2.6): the full-precision write
@@ -750,17 +687,10 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
 
     Row-identical to similarity.knn_ivfpq at equal parameters
     (test-pinned)."""
-    from pyspark.sql import Window
-
-    pq = spark.read.parquet(f"{path}/ivfpq_pq").collect()
-    m = 1 + max(int(r["s"]) for r in pq)
-    by_s: list[list] = [[] for _ in range(m)]
-    for r in pq:
-        by_s[int(r["s"])].append((int(r["pos"]), int(r["cid"]),
-                                  [float(x) for x in r["cv"]]))
-    for lst in by_s:
-        lst.sort(key=lambda t: t[0])
-    cents_data = [[(cid, cv) for _, cid, cv in lst] for lst in by_s]
+    # the PQ codebook read back as pq_codebooks rows: position == cid
+    # rank, so _pq_codebook_df's cid order restores the stored positions
+    book = spark.read.parquet(f"{path}/ivfpq_pq").collect()
+    m = 1 + max(int(r["s"]) for r in book)
 
     qid_type = queries.schema[query_id_col].dataType.simpleString()
     q_rows = [(r["query_id"], [float(x) for x in r["qv"]])
@@ -778,9 +708,7 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
     # phase 1: ADC over probed cells only (partition pruning on the
     # directory layout); recon travels as DATA via the one-row
     # broadcast codebook (literal inlining blows codegen at real sizes)
-    pq_cb = F.broadcast(spark.createDataFrame(
-        [(cents_data,)], "cents array<array<struct<cid:bigint,cv:array<double>>>>"
-    ))
+    pq_cb = F.broadcast(_pq_codebook_df(spark, book, m))
     index = spark.read.parquet(f"{path}/ivfpq_codes").where(
         F.col("centroid_id").isin(probed_cells)
     )
@@ -796,13 +724,8 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
                 cosine(F.zip_with("ccv", recon, lambda a, b: a + b),
                        F.col("qv")).alias("acos"))
     )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("acos"), F.asc("vec_id"))
-    cand_rows = (
-        approx.withColumn("arank", F.row_number().over(w1))
-        .where(F.col("arank") <= rescore_k)
-        .select("query_id", "vec_id")
-        .collect()
-    )
+    cand_rows = topk(approx, rescore_k, "acos", "vec_id") \
+        .select("query_id", "vec_id").collect()
 
     # phase 2: exact rescore with the candidate ids PUSHED into the
     # full-precision scan (row-group skipping), qv rejoined broadcast
@@ -815,13 +738,7 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
     full = spark.read.parquet(f"{path}/ivfpq_full").where(
         F.col("vec_id").isin(cand_ids)
     )
-    exact = (
-        F.broadcast(cand).join(full, "vec_id")
-        .join(F.broadcast(qdf), "query_id")
-        .select("query_id", "vec_id", cosine("v", "qv").alias("cos"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return exact.withColumn("rank", F.row_number().over(w2)).where(F.col("rank") <= k)
+    return exact_rescore(cand, full, qdf, k)
 
 
 def build_sparse_pruned(spark: SparkSession, path: str, keep: int = 64) -> None:
@@ -851,7 +768,7 @@ def hybrid_serve_approx(spark: SparkSession, path: str, queries: DataFrame,
     index."""
     if search_k is None:
         search_k = max(k * 2, 20)
-    return _rrf_union_fuse(
+    return rrf_fuse(
         _ivf_dense_scores(spark, path, queries, nprobe),
         _bm25_scores(spark, path, queries, "postings_pruned"), k, search_k)
 
@@ -881,14 +798,25 @@ def delete_from_index(spark: SparkSession, path: str, deleted_docs: DataFrame,
 
     ``deleted_docs`` carries (id, text) — the catalog rows being
     purged: exact df retraction needs the deleted docs' term sets, and
-    a deletion request always has the catalog row in hand. The cascade
-    is IDEMPOTENT: ids are first restricted to docs actually present
-    and not already tombstoned, so a retried deletion job (the normal
-    case for an erasure pipeline) cannot double-decrement the
-    mergeable state. Remaining
+    a deletion request always has the catalog row in hand. Remaining
     postings keep their index-time weights until the next full
     build_sparse — the same measured staleness trade as the append
     path (merge_sparse_append docstring).
+
+    Crash and retry: the cascade is IDEMPOTENT and safe to rerun after a
+    crash at any point. Its order is
+      1. retract the state and publish it (publish.swap, the commit
+         point of the retraction) together with ``bm25_state/retracted``:
+         the ids this and any unfinished earlier cascade retracted;
+      2. rebuild terms/ and rewrite the artifacts;
+      3. append the erased ids to tombstones/ (the completion fence).
+    A rerun retracts only ids that are present, not tombstoned and not
+    in ``retracted`` — so never twice — and rewrites and tombstones the
+    ``retracted`` ids that are not yet in tombstones/ without
+    retracting them again. Limit: a build_sparse or merge_sparse_append
+    that publishes the state between the crash and the rerun drops
+    ``retracted``; that case needs the generational manifest (ROADMAP
+    D3).
 
     Scale: delete-batch-sized tokenize + vocab-sized state merge + two
     anti-join rewrites of the artifact tables. The rewrites are the
@@ -926,27 +854,41 @@ def delete_from_index(spark: SparkSession, path: str, deleted_docs: DataFrame,
     for lp_df in live_parts[1:]:
         live = live.unionByName(lp_df)
     ids = ids.join(live.distinct(), "_del_id", "left_semi")
+    state = f"{path}/bm25_state"
+    tombs = None
     if os.path.exists(f"{path}/tombstones"):
         tombs = spark.read.parquet(f"{path}/tombstones") \
             .select(F.col("doc_id").alias("_del_id"))
         ids = ids.join(tombs, "_del_id", "left_anti")
+    # _redo: retracted by an unfinished earlier cascade — rewrite and
+    # tombstone, never retract again
+    ids = ids.withColumn("_redo", F.lit(False))
+    pending = publish.read(spark, state, "retracted")
+    if pending is not None:
+        redo = pending.select(F.col("doc_id").alias("_del_id"))
+        if tombs is not None:
+            redo = redo.join(tombs, "_del_id", "left_anti")
+        redo = redo.withColumn("_redo", F.lit(True))
+        ids = ids.join(redo, "_del_id", "left_anti").unionByName(redo)
+    # materialized BEFORE the swap replaces bm25_state/retracted
     ids = checkpoint(ids)
     live_deleted = deleted_docs.join(
-        ids, deleted_docs[id_col] == F.col("_del_id"), "left_semi")
+        ids.where(~F.col("_redo")),
+        deleted_docs[id_col] == F.col("_del_id"), "left_semi")
     tok = cache(bm25.tokenize(live_deleted, id_col=id_col, text_col=text_col))
     # the two retractions are independent aggregations over the shared
     # cached tok — overlap their materialization (guide §2.6)
-    state = f"{path}/bm25_state"
     new_c, new_t = concurrently(
         lambda: checkpoint(bm25.retract_corpus_state(
             publish.read(spark, state, "corpus"), tok)),
         lambda: checkpoint(bm25.retract_term_state(
             publish.read(spark, state, "terms"), tok)),
     )
+    erased = ids.select(F.col("_del_id").alias("doc_id"))
+    _publish_bm25_state(path, new_c, new_t, retracted=erased)
 
     def _rebuild_terms() -> None:
-        # reads only the CHECKPOINTED retracted state, never the files
-        # the swap replaces — independent of the swap and the rewrites
+        # reads only the CHECKPOINTED retracted state
         terms = checkpoint(bm25.term_stats_from_state(
             new_t, bm25.stats_from_state(new_c)))
         terms.write.mode("overwrite").parquet(f"{path}/terms")
@@ -979,19 +921,16 @@ def delete_from_index(spark: SparkSession, path: str, deleted_docs: DataFrame,
             w.parquet(p)
         return run
 
-    # state swap, terms rebuild and the per-artifact rewrites are
-    # mutually independent (disjoint paths; every input they share —
-    # ids, new_c, new_t — is already checkpointed), so overlap them
-    # (§2.6). The tombstones append stays strictly LAST, outside the
-    # pool: it is the idempotence fence — a retried cascade filters ids
-    # through the tombstones, so they may only record docs whose
-    # rewrites all completed.
+    # terms rebuild and the per-artifact rewrites are mutually
+    # independent (disjoint paths; every input they share — ids, new_c,
+    # new_t — is already checkpointed), so overlap them (§2.6). The
+    # tombstones append stays strictly LAST, outside the pool: it is the
+    # completion fence — a rerun skips tombstoned ids, so they may only
+    # record docs whose rewrites all completed.
     concurrently(
-        lambda: _publish_bm25_state(path, new_c, new_t),
         _rebuild_terms,
         *[_rewrite(sub, part) for sub, part in artifacts
           if os.path.exists(f"{path}/{sub}")],
     )
-    ids.select(F.col("_del_id").alias("doc_id")).write.mode("append") \
-        .parquet(f"{path}/tombstones")
+    erased.write.mode("append").parquet(f"{path}/tombstones")
     tok.unpersist()

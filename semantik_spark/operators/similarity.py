@@ -1,35 +1,41 @@
 """Similarity search over an embedding column (ARRAY<FLOAT>).
 
-Two physical strategies for the same logical top-k-by-cosine:
+Seven physical strategies for the same logical top-k-by-cosine:
 
   knn_bruteforce — exact: broadcast the query batch against the corpus
                    scan; one pass, zip_with/aggregate dot products in
-                   whole-stage codegen; window top-k per query.
-                   O(|corpus|·|queries|) work but ZERO index build —
-                   correct v1 and the correctness oracle for ANN.
+                   whole-stage codegen. O(|corpus|·|queries|) work but
+                   ZERO index build — the correctness oracle for ANN.
+  knn_lsh        — random-hyperplane LSH buckets (hyperplanes derived
+                   from hash60 so the oracle can replay them); queries
+                   probe their bucket plus hamming-1 neighbors.
+  knn_ivf        — IVF coarse quantization: queries probe their nprobe
+                   nearest cells and rank exactly inside them.
+  knn_quantized  — int8 scalar quantization, then exact rescore.
+  knn_binary     — sign-bit codes ranked by Hamming, then exact rescore.
+  knn_pq         — product quantization, then exact rescore.
+  knn_ivfpq      — IVFADC: IVF cells + PQ of the residual, then exact
+                   rescore.
 
-  knn_lsh        — approximate: random-hyperplane LSH (deterministic
-                   hyperplanes derived from hash60 so the oracle can
-                   replay them). Corpus is bucketed by an nbits-bit
-                   sign signature; queries probe their own bucket plus
-                   hamming-1 neighbors; exact cosine re-rank within
-                   candidates. At 100 TB the bucket column is a
-                   partition/bucketing key — probes prune to a handful
-                   of buckets instead of the full scan.
+Shared stages (one implementation each; operators/serving.py's
+persisted IVF and IVFADC paths compose the same ones):
 
-  knn_ivf        — approximate: IVF coarse quantization. Every corpus
-                   vector is assigned to its nearest centroid by a
-                   per-row array fold over broadcast centroid literals
-                   (NO shuffle — the assignment is a narrow map over
-                   the scan); queries probe the nprobe nearest cells
-                   and exact-rank inside them. At 100 TB centroid_id
-                   is the partition key of the index table, so a probe
-                   reads nprobe/n_centroids of the corpus.
+  functions.ranking.topk   per-query top-k (score DESC, id ASC)
+  exact_rescore            late-materialized exact cosine of candidates
+  ivf_centroids            codebook seeding (n smallest-id vectors)
+  ivf_refine, pq_codebooks deterministic Lloyd training
+  assign_cells             IVF cell assignment
+  assign_residual          IVFADC coarse assignment + residual
+  _probe_cells             query → nprobe nearest cells, exploded
+  pq_subspaces             PQ codebook grouped by subspace in cid order
+  _pq_reconstruct          per-subspace PQ argmin → reconstructed vector
 
-The reference's dense retrieval is Qdrant HNSW (service.py:209-218);
-brute-force gives identical results to exhaustive search, LSH is the
-scale path (SURVEY §4: ANN is a physical-plan swap, not a semantic
-change).
+At 100 TB the bucket / centroid_id column is the partition key of the
+index table, so a probe reads a handful of buckets or
+nprobe/n_centroids of the corpus instead of the full scan. The
+reference's dense retrieval is Qdrant HNSW (service.py:209-218);
+brute-force gives identical results to exhaustive search (SURVEY §4:
+ANN is a physical-plan swap, not a semantic change).
 """
 
 from __future__ import annotations
@@ -43,6 +49,7 @@ from pyspark.sql import functions as F
 from semantik_spark.functions.caching import cache
 from semantik_spark.functions.parallel import spread
 from semantik_spark.functions.quant import round_half_away
+from semantik_spark.functions.ranking import topk
 from semantik_spark.functions.vectors import cosine
 
 # --- summation-order safety audit (optimization r14) -------------------
@@ -68,6 +75,9 @@ from semantik_spark.functions.vectors import cosine
 # query at every SF and asserts min(margin/bound) stays orders of
 # magnitude above 1 (artifact: plans/r14/order_margin_audit.txt —
 # measured min ratio 1.0e4 across all SFs: PASS).
+# tests/test_similarity.py::test_order_margin_audit_gate holds the
+# knn_ivf, knn_pq, knn_ivfpq and serving.build_dense_ivf trainings to
+# the same criterion (min ratio > 10) on sf0.001 in every test run.
 _ORDER_AUDIT: list[dict] = []
 
 
@@ -111,8 +121,24 @@ def knn_bruteforce(corpus: DataFrame, queries: DataFrame, k: int = 5,
     scored = c.crossJoin(F.broadcast(q)).select(
         "query_id", "vec_id", cosine("v", "qv").alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return topk(scored, k, "cos", "vec_id")
+
+
+def exact_rescore(cand: DataFrame, full: DataFrame, queries: DataFrame,
+                  k: int) -> DataFrame:
+    """Phase 2 of every two-phase ANN path: exact cosine of the
+    (query_id, vec_id) candidates against their full-precision vectors
+    ``full`` (vec_id, v) and the queries (query_id, qv), then the top-k —
+    query_id, vec_id, cos, rank. Candidates and queries are
+    broadcast, so only the candidates' rows of ``full`` meet the join
+    (late materialization: the reference's id-then-payload fetch,
+    service.py:248-277)."""
+    exact = (
+        F.broadcast(cand).join(full, "vec_id")
+        .join(F.broadcast(queries), "query_id")
+        .select("query_id", "vec_id", cosine("v", "qv").alias("cos"))
+    )
+    return topk(exact, k, "cos", "vec_id")
 
 
 def train_sample(corpus: DataFrame, mod: int,
@@ -192,6 +218,38 @@ def assign_cells(df: DataFrame, codebook: DataFrame, vec_col: str) -> DataFrame:
     return df.crossJoin(codebook).withColumn(
         "centroid_id", -F.array_max(_nearest_centroids(vec_col))["negcid"]
     ).drop("cents")
+
+
+def _probe_cells(queries: DataFrame, codebook: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, qv) queries exploded to one row per probed cell: the
+    ``nprobe`` nearest centroid_ids under the broadcast ``codebook``
+    (tie → smaller cid)."""
+    top_cells = F.slice(F.reverse(F.array_sort(_nearest_centroids("qv"))), 1, nprobe)
+    return queries.crossJoin(codebook).withColumn(
+        "centroid_id", F.explode(F.transform(top_cells, lambda s: -s["negcid"]))
+    ).drop("cents")
+
+
+def assign_residual(c: DataFrame, codebook: DataFrame) -> DataFrame:
+    """IVFADC coarse assignment of (vec_id, v) rows: centroid_id, the
+    winning centroid's vector ``ccv`` and ``residual`` = v − ccv. One
+    argmax carries (cos, negcid, cv), so the winning vector comes out
+    without a second codebook lookup; the cell is the one assign_cells
+    picks. Callers select the columns they keep before caching."""
+    best = F.array_max(F.transform(
+        F.col("cents"),
+        lambda ct: F.struct(
+            cosine(F.col("v"), ct["cv"]).alias("cos"),
+            (-ct["cid"]).alias("negcid"),
+            ct["cv"].alias("cv"),
+        ),
+    ))
+    return c.crossJoin(codebook).select(
+        "vec_id", "v",
+        (-best["negcid"]).alias("centroid_id"),
+        best["cv"].alias("ccv"),
+        F.zip_with("v", best["cv"], lambda a, b: a - b).alias("residual"),
+    )
 
 
 def ivf_refine(corpus: DataFrame, cent_rows: list, iters: int = 1,
@@ -313,15 +371,11 @@ def knn_ivf(corpus: DataFrame, queries: DataFrame, k: int = 5,
                              F.col(vec_col).alias("v")), "vec_id")
     assigned = assign_cells(c, codebook, "v")
     q = queries.select(F.col(query_id_col).alias("query_id"), F.col(query_vec_col).alias("qv"))
-    top_cells = F.slice(F.reverse(F.array_sort(_nearest_centroids("qv"))), 1, nprobe)
-    probes = q.crossJoin(codebook).withColumn(
-        "centroid_id", F.explode(F.transform(top_cells, lambda s: -s["negcid"]))
-    ).drop("cents")
+    probes = _probe_cells(q, codebook, nprobe)
     scored = assigned.join(F.broadcast(probes), "centroid_id").select(
         "query_id", "vec_id", cosine("v", "qv").alias("cos")
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return topk(scored, k, "cos", "vec_id")
 
 
 def knn_quantized(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -350,19 +404,8 @@ def knn_quantized(corpus: DataFrame, queries: DataFrame, k: int = 5,
     approx = deq.crossJoin(F.broadcast(q)).select(
         "query_id", "vec_id", cosine("dv", "qv").alias("acos")
     )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("acos"), F.asc("vec_id"))
-    cand = (
-        approx.withColumn("arank", F.row_number().over(w1))
-        .where(F.col("arank") <= rescore_k)
-        .select("query_id", "vec_id")
-    )
-    exact = (
-        F.broadcast(cand).join(c, "vec_id")
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", "vec_id", cosine("v", "qv").alias("cos"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return exact.withColumn("rank", F.row_number().over(w2)).where(F.col("rank") <= k)
+    cand = topk(approx, rescore_k, "acos", "vec_id").select("query_id", "vec_id")
+    return exact_rescore(cand, c, q, k)
 
 
 def _hyperplane(dim: int, bit: int, table: int = 0) -> F.Column:
@@ -458,8 +501,7 @@ def knn_lsh(corpus: DataFrame, queries: DataFrame, k: int = 5, dim: int = 64,
         # within one table the probe buckets are distinct so no dedup
         # (and no extra exchange) is needed in the single-table plan
         scored = scored.distinct()
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
+    return topk(scored, k, "cos", "vec_id")
 
 
 def _l2(a, b) -> F.Column:
@@ -502,11 +544,7 @@ def pq_codebooks(corpus: DataFrame, dim: int = 64, m: int = 8,
     d = dim // m
     spark = corpus.sparkSession
     corpus = _maybe_sample(corpus, train_sample_mod, id_col)
-    seed_rows = sorted(
-        corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
-        .orderBy(F.asc("cid")).limit(n_centroids).collect(),
-        key=lambda r: r["cid"],
-    )
+    seed_rows = ivf_centroids(corpus, n_centroids, id_col, vec_col)
     book = [
         {"s": s, "cid": int(r["cid"]),
          "cv": [float(x) for x in r["cv"][s * d:(s + 1) * d]]}
@@ -568,20 +606,48 @@ def pq_codebooks(corpus: DataFrame, dim: int = 64, m: int = 8,
     return book
 
 
-def _pq_codebook_df(spark, book: list, m: int):
-    """One-row codebook DataFrame indexed BY SUBSPACE — ``cents[s]`` is
-    the cid-ordered centroid list of subspace s, so the per-row encoder
-    reaches its candidates with one element_at instead of re-filtering
-    a flat m·n_centroids array m times per row (measured 2× on the
-    encode stage at sf0.1)."""
+def pq_subspaces(book: list, m: int) -> list[list]:
+    """pq_codebooks output [{"s", "cid", "cv"}] grouped BY SUBSPACE:
+    entry s is subspace s's [(cid, cv)] list in cid order, so a
+    centroid's position in its list is its rank by cid — the positional
+    code write_ivfpq_index stores."""
     by_s: list[list] = [[] for _ in range(m)]
     for b in book:
-        by_s[b["s"]].append((b["cid"], b["cv"]))
+        by_s[int(b["s"])].append((int(b["cid"]), [float(x) for x in b["cv"]]))
     for lst in by_s:
         lst.sort(key=lambda t: t[0])
+    return by_s
+
+
+def _pq_codebook_df(spark, book: list, m: int):
+    """One-row codebook DataFrame indexed BY SUBSPACE — ``cents[s]`` is
+    pq_subspaces(book)[s], so the per-row encoder reaches its
+    candidates with one element_at instead of re-filtering a flat
+    m·n_centroids array m times per row (measured 2× on the encode
+    stage at sf0.1)."""
     return spark.createDataFrame(
-        [(by_s,)], "cents array<array<struct<cid:bigint,cv:array<double>>>>"
+        [(pq_subspaces(book, m),)],
+        "cents array<array<struct<cid:bigint,cv:array<double>>>>"
     )
+
+
+def _pq_reconstruct(vec_col: str, m: int, d: int) -> F.Column:
+    """PQ reconstruction of ``vec_col`` against the joined ``cents``
+    (_pq_codebook_df): per subspace s, the nearest centroid's values
+    (squared L2, tie → smaller cid), concatenated. One pass per
+    subspace: the argmin struct carries (dist, cid, cv), so the winning
+    values come out without a second lookup."""
+    def nearest_cv(s: int) -> F.Column:
+        return F.array_min(F.transform(
+            F.element_at(F.col("cents"), s + 1),
+            lambda ct: F.struct(
+                _l2(F.slice(F.col(vec_col), s * d + 1, d), ct["cv"]).alias("dist"),
+                ct["cid"].alias("cid"),
+                ct["cv"].alias("cv"),
+            ),
+        ))["cv"]
+
+    return F.flatten(F.array(*[nearest_cv(s) for s in range(m)]))
 
 
 def knn_pq(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -611,43 +677,16 @@ def knn_pq(corpus: DataFrame, queries: DataFrame, k: int = 5,
     c = corpus.select(F.col(id_col).alias("vec_id"),
                       F.col(vec_col).cast("array<double>").alias("v"))
 
-    def best_cv(s: int) -> F.Column:
-        # one pass: carry (dist, cid, cv) through the argmin struct —
-        # lexicographic struct ordering gives min dist, tie -> min cid,
-        # and the winning centroid values come out without a second
-        # lookup over the candidate array
-        cands = F.element_at(F.col("cents"), s + 1)
-        return F.array_min(F.transform(
-            cands,
-            lambda ct: F.struct(
-                _l2(F.slice(F.col("v"), s * d + 1, d), ct["cv"]).alias("dist"),
-                ct["cid"].alias("cid"),
-                ct["cv"].alias("cv"),
-            ),
-        ))["cv"]
-
     recon = c.crossJoin(cb).select(
-        "vec_id", "v",
-        F.flatten(F.array(*[best_cv(s) for s in range(m)])).alias("rv"),
-    ).drop("cents")
+        "vec_id", "v", _pq_reconstruct("v", m, d).alias("rv"),
+    )
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(query_vec_col).alias("qv"))
     approx = recon.crossJoin(F.broadcast(q)).select(
         "query_id", "vec_id", cosine("rv", "qv").alias("acos")
     )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("acos"), F.asc("vec_id"))
-    cand = (
-        approx.withColumn("arank", F.row_number().over(w1))
-        .where(F.col("arank") <= rescore_k)
-        .select("query_id", "vec_id")
-    )
-    exact = (
-        F.broadcast(cand).join(c, "vec_id")
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", "vec_id", cosine("v", "qv").alias("cos"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return exact.withColumn("rank", F.row_number().over(w2)).where(F.col("rank") <= k)
+    cand = topk(approx, rescore_k, "acos", "vec_id").select("query_id", "vec_id")
+    return exact_rescore(cand, c, q, k)
 
 
 def binary_code(vec_col: str, dim: int, word: int, word_bits: int = 32) -> F.Column:
@@ -718,13 +757,7 @@ def knn_binary(corpus: DataFrame, queries: DataFrame, k: int = 5,
         .where(F.col("hrank") <= rescore_k)
         .select("query_id", "vec_id")
     )
-    exact = (
-        F.broadcast(cand).join(c, "vec_id")
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", "vec_id", cosine("v", "qv").alias("cos"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return exact.withColumn("rank", F.row_number().over(w2)).where(F.col("rank") <= k)
+    return exact_rescore(cand, c, q, k)
 
 
 def matryoshka_recall(corpus: DataFrame, queries: DataFrame, k: int = 10,
@@ -1071,7 +1104,8 @@ def knn_ivfpq(corpus: DataFrame, queries: DataFrame, k: int = 5,
     100 TB shape: both codebooks are corpus-size-independent collects
     (n_centroids×dim + m×pq_centroids×dim/m doubles); encode is one
     narrow map over the scan; the serving join reads probed cells only
-    (partitionBy(centroid_id) layout, as serving.write_ivf_index).
+    (the partitionBy(centroid_id) layout serving.write_ivfpq_index
+    persists and serving.ivfpq_serve probes).
     """
     d = dim // m
     spark = corpus.sparkSession
@@ -1088,74 +1122,26 @@ def knn_ivfpq(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # order-margin audit's proof (see ivf_refine).
     c = corpus.select(F.col(id_col).alias("vec_id"),
                       F.col(vec_col).cast("array<double>").alias("v"))
-
-    # assign + residual in one pass: carry (cos, negcid, cv) through
-    # the argmax struct so the winning centroid's vector is available
-    # without a second codebook lookup
-    best = F.array_max(F.transform(
-        F.col("cents"),
-        lambda ct: F.struct(
-            cosine(F.col("v"), ct["cv"]).alias("cos"),
-            (-ct["cid"]).alias("negcid"),
-            ct["cv"].alias("cv"),
-        ),
-    ))
-    assigned = c.crossJoin(codebook).select(
-        "vec_id", "v",
-        (-best["negcid"]).alias("centroid_id"),
-        best["cv"].alias("ccv"),
-        F.zip_with("v", best["cv"], lambda a, b: a - b).alias("residual"),
-    )
-    assigned = cache(assigned)
+    assigned = cache(assign_residual(c, codebook))
 
     book = pq_codebooks(assigned, dim=dim, m=m, n_centroids=pq_centroids,
                         refine_iters=refine_iters,
                         id_col="vec_id", vec_col="residual")
     cb = F.broadcast(_pq_codebook_df(spark, book, m))
-
-    def best_rcv(s: int) -> F.Column:
-        cands = F.element_at(F.col("cents"), s + 1)
-        return F.array_min(F.transform(
-            cands,
-            lambda ct: F.struct(
-                _l2(F.slice(F.col("residual"), s * d + 1, d), ct["cv"]).alias("dist"),
-                ct["cid"].alias("cid"),
-                ct["cv"].alias("cv"),
-            ),
-        ))["cv"]
-
     recon = assigned.crossJoin(cb).select(
         "vec_id", "centroid_id",
-        F.zip_with(
-            "ccv",
-            F.flatten(F.array(*[best_rcv(s) for s in range(m)])),
-            lambda a, b: a + b,
-        ).alias("rv"),
+        F.zip_with("ccv", _pq_reconstruct("residual", m, d),
+                   lambda a, b: a + b).alias("rv"),
     )
 
     q = queries.select(F.col(query_id_col).alias("query_id"),
                        F.col(query_vec_col).alias("qv"))
-    top_cells = F.slice(F.reverse(F.array_sort(_nearest_centroids("qv"))), 1, nprobe)
-    probes = q.crossJoin(codebook).withColumn(
-        "centroid_id", F.explode(F.transform(top_cells, lambda s: -s["negcid"]))
-    ).drop("cents")
-
+    probes = _probe_cells(q, codebook, nprobe)
     approx = recon.join(F.broadcast(probes), "centroid_id").select(
         "query_id", "vec_id", cosine("rv", "qv").alias("acos")
     )
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("acos"), F.asc("vec_id"))
-    cand = (
-        approx.withColumn("arank", F.row_number().over(w1))
-        .where(F.col("arank") <= rescore_k)
-        .select("query_id", "vec_id")
-    )
-    exact = (
-        F.broadcast(cand).join(c, "vec_id")
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", "vec_id", cosine("v", "qv").alias("cos"))
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    return exact.withColumn("rank", F.row_number().over(w2)).where(F.col("rank") <= k)
+    cand = topk(approx, rescore_k, "acos", "vec_id").select("query_id", "vec_id")
+    return exact_rescore(cand, c, q, k)
 
 
 def label_centroid_similarity(embeddings: DataFrame,

@@ -35,10 +35,11 @@ the per-(query,doc) sum).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from semantik_spark.functions.hashing import hash60
+from semantik_spark.functions.ranking import topk
 from semantik_spark.operators.bm25 import tokenize
 
 # BERT WordPiece vocabulary size — the id space SPLADE activations live in.
@@ -200,12 +201,7 @@ def search(docs: DataFrame, queries: DataFrame, k: int = 10,
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum(F.col("weight") * F.col("q_weight")), 6).alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank")
-    )
+    return topk(scored, k)
 
 
 def splade_model_udf(model_factory, batch_size: int = 32):

@@ -26,30 +26,18 @@ def get_spark(app_name: str = "semantik_spark", shuffle_partitions: int | None =
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # let AQE (incl. partition coalescing) apply when materializing
         # persisted DataFrames: without this, every cache() site
-        # materializes with the full static shuffle-partition count —
-        # measured locally, the operator caches then cost MORE in tiny-
-        # partition scheduling overhead than the recompute they save
-        # (e.g. gdpr_delete_cascade 93 -> 480 tasks). Scale-adaptive by
-        # construction: AQE coalesces by target bytes, so big cached
-        # frames keep their parallelism.
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-                os.environ.get("SPARK_GRAFT_CACHED_AQE", "true"))
+        # materializes with the full static shuffle-partition count, and
+        # tiny-partition scheduling costs more than the recompute the
+        # cache saves. Scale-adaptive: AQE coalesces by target bytes, so
+        # big cached frames keep their parallelism.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # streaming state-store provider (VERDICT r13 item 5):
-        # SPARK_GRAFT_STATESTORE=rocksdb swaps in the RocksDB provider
-        # for the stateful streaming operators (interval join, session
-        # windows, dropDuplicatesWithinWatermark). Default stays the
-        # HDFS-backed provider: measured on the replay suite at sf0.1
-        # (interleaved, 3 reps) RocksDB was FLAT-to-slower locally —
-        # per-micro-batch native store open/commit costs more than the
-        # tiny in-memory maps it replaces at this state size. At real
-        # state scale (GBs/partition) RocksDB is the standard choice;
-        # the env knob ships the option without changing local numbers.
+        # the HDFS-backed state store for the stateful streaming
+        # operators (interval join, session windows,
+        # dropDuplicatesWithinWatermark): at this state size its
+        # in-memory maps beat RocksDB's per-micro-batch native open/commit
         .config("spark.sql.streaming.stateStore.providerClass",
                 "org.apache.spark.sql.execution.streaming.state."
-                "RocksDBStateStoreProvider"
-                if os.environ.get("SPARK_GRAFT_STATESTORE") == "rocksdb"
-                else "org.apache.spark.sql.execution.streaming.state."
                 "HDFSBackedStateStoreProvider")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))

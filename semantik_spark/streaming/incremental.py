@@ -155,7 +155,7 @@ def incremental_index(stream: DataFrame, idx_dir: str, catalog_path: str,
     nightly) to re-level the stale old-doc weights — exactly the trade
     the reference's periodic re-sync makes. Returns the StreamingQuery.
     """
-    from semantik_spark.operators import serving
+    from semantik_spark.operators import search, serving
 
     def process(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -199,7 +199,7 @@ def incremental_index(stream: DataFrame, idx_dir: str, catalog_path: str,
         # _last_batch marker. Previously the catalog committed FIRST:
         # a crash after it silently dropped the batch from the index
         # forever (the replay's anti-join matched everything).
-        serving.doc_embeddings(changed, id_col, text_col, ("_batch_id",)) \
+        search.doc_embeddings(changed, id_col, text_col, ("_batch_id",)) \
             .write.mode("append").parquet(f"{idx_dir}/dense_log")
         if sparse_refresh == "merge" and n_updates == 0:
             # APPEND path: batch-sized stats delta-merge, no corpus

@@ -132,14 +132,24 @@ def test_embedding_dup_pairs_not_all_pairs(spark):
 
 
 def test_rrf_join_stays_on_topk_rows(spark):
-    """RRF fuses two ALREADY-truncated rank lists; the full-outer join
-    runs on ≤2·search_k rows per query, so whatever join strategy AQE
-    picks, no full-corpus exchange may appear above the rank filters."""
+    """RRF fuses ALREADY-truncated rank lists: the per-(query, branch)
+    rank filter (rank <= search_k) sits over the union of both branches,
+    and everything above it is a linear chain over its ≤ 2·search_k
+    rows per query — no join, union or scan brings corpus rows back in —
+    so whatever exchanges AQE plans for the fusion, none is
+    corpus-sized."""
+    import re
+
     docs, qs = _mk_docs(spark), _mk_queries(spark)
     fused = search.hybrid_search(docs, qs, k=5, search_k=10)
-    # both branches were rank-filtered before the join
-    plan = fused._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("rank#") >= 2  # rank filters survive into the join inputs
+    plan = fused._jdf.queryExecution().optimizedPlan().toString().splitlines()
+    cut = [i for i, line in enumerate(plan)
+           if re.search(r"Filter \(rank#\d+ <= 10\)", line)]
+    assert len(cut) == 1, "\n".join(plan)
+    above, below = "\n".join(plan[:cut[0]]), "\n".join(plan[cut[0]:])
+    assert "Union" in below  # both branches are cut by this one filter
+    for op in ("Join", "Union", "Relation", "LogicalRDD", "Range"):
+        assert op not in above, (op, above)
 
 
 def test_lm_quality_broadcasts_vocab(spark):
@@ -1188,6 +1198,19 @@ def test_heavy_query_job_count_pins(spark):
         ("source_file_filters", 6),
         ("source_git_sync", 10),
         ("source_imap_sync", 10),
+        # the queries routed through the shared retrieval stages
+        # (functions.ranking.topk, search.rrf_fuse, bm25._index,
+        # similarity.exact_rescore), pinned at their warmed sf0.001
+        # counts measured before those stages were shared
+        ("bm25_search", 38),
+        ("bm25_pruned_search", 38),
+        ("more_like_this", 43),
+        ("hybrid_rrf", 43),
+        ("hyde_hybrid", 45),
+        ("knn_quantized", 9),
+        ("knn_binary", 9),
+        ("knn_pq", 13),
+        ("knn_ivfpq", 20),
     ]
     for name, bound in pins:
         qs[name](spark, sf).count()  # warm: AQE stats settle

@@ -24,7 +24,7 @@ def _ranked(spark, rows):
 def test_rrf_formula_both_branches(spark):
     dense = _ranked(spark, [("q", "a", 0.9, 1), ("q", "b", 0.8, 2)])
     sparse = _ranked(spark, [("q", "b", 5.0, 1), ("q", "c", 4.0, 2)])
-    out = {r["doc_id"]: r for r in rrf_fuse(dense, sparse, k=10).collect()}
+    out = {r["doc_id"]: r for r in rrf_fuse(dense, sparse, k=10, search_k=10).collect()}
     assert out["a"]["score"] == pytest.approx(1 / (RRF_K + 1))
     assert out["b"]["score"] == pytest.approx(1 / (RRF_K + 2) + 1 / (RRF_K + 1))
     assert out["c"]["score"] == pytest.approx(1 / (RRF_K + 2))

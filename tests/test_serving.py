@@ -642,3 +642,65 @@ def test_replace_batch_postings_converges_after_partial_move(spark, tmp_path):
     again = spark.read.parquet(f"{idx}/postings")
     assert again.count() == 30
     assert again.groupBy("doc_id", "term").count().where("count > 1").count() == 0
+
+
+def test_delete_from_index_retry_after_crash_equals_rebuild(spark, tmp_path, monkeypatch):
+    """Fault injection on the delete cascade: a crash right after the
+    bm25_state swap, right after one artifact rewrite, or right before
+    the tombstones append, then a retry of the same request. After the
+    retry bm25_state/{corpus,terms} and terms/ equal a fresh
+    build_sparse over the survivors (the retraction is applied exactly
+    once) and every erased id is in tombstones/ exactly once."""
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from semantik_spark.functions import publish
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha shared{i % 4} beta unique{i}") for i in range(24)],
+        ["doc_id", "text"])
+    gone = docs.where("doc_id % 4 = 1")  # takes all of 'shared1' with it
+    gone_ids = sorted(r["doc_id"] for r in gone.collect())
+    base, ref = str(tmp_path / "base"), str(tmp_path / "ref")
+    serving.build_index(docs, base)
+    serving.build_sparse(docs.where("doc_id % 4 <> 1"), ref)
+
+    real_swap, real_parquet = publish.swap, DataFrameWriter.parquet
+
+    def after_swap(*a, **kw):
+        real_swap(*a, **kw)
+        raise RuntimeError("crash after swap")
+
+    def after_rewrite(self, p, *a, **kw):
+        real_parquet(self, p, *a, **kw)
+        if p.endswith("/dense"):
+            raise RuntimeError("crash after rewrite")
+
+    def before_tombstones(self, p, *a, **kw):
+        if p.endswith("/tombstones"):
+            raise RuntimeError("crash before tombstones")
+        real_parquet(self, p, *a, **kw)
+
+    def table(p: str, sub: str) -> list:
+        return sorted(tuple(round(v, 10) if isinstance(v, float) else v
+                            for v in r)
+                      for r in spark.read.parquet(f"{p}/{sub}").collect())
+
+    for name, owner, attr, fault in (
+        ("swap", publish, "swap", after_swap),
+        ("rewrite", DataFrameWriter, "parquet", after_rewrite),
+        ("tombstones", DataFrameWriter, "parquet", before_tombstones),
+    ):
+        idx = str(tmp_path / name)
+        shutil.copytree(base, idx)
+        monkeypatch.setattr(owner, attr, fault)
+        with pytest.raises(RuntimeError, match="crash"):
+            serving.delete_from_index(spark, idx, gone)
+        monkeypatch.undo()
+        serving.delete_from_index(spark, idx, gone)
+        for sub in ("bm25_state/corpus", "bm25_state/terms", "terms"):
+            assert table(idx, sub) == table(ref, sub), (name, sub)
+        tombs = sorted(r["doc_id"] for r in
+                       spark.read.parquet(f"{idx}/tombstones").collect())
+        assert tombs == gone_ids, name

@@ -698,3 +698,35 @@ def test_knn_lsh_rejects_unimplemented_probe_radius(spark):
         [("q1", [0.1] * 8)], "query_id string, query_vec array<double>")
     with pytest.raises(ValueError, match="probe_hamming"):
         knn_lsh(emb, q, dim=8, probe_hamming=2)
+
+
+def test_order_margin_audit_gate(spark, tmp_path, monkeypatch):
+    """The order-margin audit as a gated check: with
+    SPARK_GRAFT_ORDER_AUDIT=1 every 6 dp Lloyd mean that the knn_ivf,
+    knn_pq and knn_ivfpq trainings and serving.build_dense_ivf compute on
+    the sf0.001 test data sits more than 10x the any-order summation
+    error bound away from a rounding boundary — the PASS criterion of
+    tools/order_margin_audit.py. A FAIL means a different partitioning
+    could move a centroid in the 6th decimal (see ivf_refine)."""
+    import __spark_entry__ as e
+
+    from semantik_spark.operators import serving, similarity
+
+    sf = "/root/testdata/sf0.001"
+    qs = e.queries()
+    monkeypatch.setenv("SPARK_GRAFT_ORDER_AUDIT", "1")
+    runs = [(name, lambda name=name: qs[name](spark, sf))
+            for name in ("knn_ivf", "knn_pq", "knn_ivfpq")]
+    runs.append(("build_dense_ivf", lambda: serving.build_dense_ivf(
+        spark.read.parquet(f"{sf}/documents.parquet"), str(tmp_path / "idx"),
+        n_centroids=16)))
+    try:
+        for name, run in runs:
+            similarity._ORDER_AUDIT.clear()
+            run()  # training collects its means while the plan is built
+            entries = list(similarity._ORDER_AUDIT)
+            assert entries, f"{name}: the audit did not fire"
+            worst = min(x["margin"] / x["bound"] for x in entries)
+            assert worst > 10, (name, worst)
+    finally:
+        similarity._ORDER_AUDIT.clear()
