@@ -33,6 +33,7 @@ from semantik_spark.config import (
 )
 from semantik_spark.functions.text import bm25_tokens
 from semantik_spark.functions.vectors import _bind
+from semantik_spark.operators.serving import localize_batch
 
 
 def candidate_k(k: int) -> int:
@@ -80,7 +81,10 @@ def rerank(candidates: DataFrame, queries: DataFrame, docs: DataFrame, k: int = 
     pairs → top-k by rerank score (ties: doc_id).
 
     ``candidates`` = (query_id, doc_id, rank) from first-stage search,
-    already clamped to candidate_k(k) rows per query.
+    already clamped to candidate_k(k) rows per query. ``queries`` is
+    the driver-scale (query_id, query_text) batch: it is collected once
+    (serving.localize_batch) and joined as a LocalRelation, so the
+    rerank join never rescans the caller's batch.
     Output: query_id, doc_id, rerank_score, rank.
     """
     # localCheckpoint the candidate set BEFORE hydrate: hydrate
@@ -96,8 +100,8 @@ def rerank(candidates: DataFrame, queries: DataFrame, docs: DataFrame, k: int = 
     hits = checkpoint(candidates.select("query_id", "doc_id"), eager=True)
     with_content = hydrate(hits, docs)
     with_q = with_content.join(
-        F.broadcast(queries.select("query_id", "query_text")), "query_id"
-    )
+        F.broadcast(localize_batch(queries).df(candidates.sparkSession)),
+        "query_id")
     scored = with_q.withColumn("rerank_score", score_fn(F.col("query_text"), F.col("text")))
     return topk(scored, k, "rerank_score") \
         .select("query_id", "doc_id", "rerank_score", "rank")

@@ -25,23 +25,42 @@ score DESC, id ASC):
                        rerank.rerank (operators/rerank.py).
   ivfpq_serve          IVFADC two-phase serve over ivfpq_*/.
 
+Request contract. A query batch is driver-scale by definition. Each
+serve path collects its (query_id, query_text | query_vec) batch ONCE
+(localize_batch: one Spark job, none for a batch that already is a
+local relation) and every driver-scale input the plan reads after that
+— the batch itself, its driver-embedded query vectors, the IVF probes,
+the ANN candidates — is an Arrow-built LocalRelation (_local) with the
+caller's query_id type. Executors then scan only the index: a
+``createDataFrame`` over Python rows is a Python RDD, and every branch
+and broadcast that scans it runs Python workers again. Every index
+artifact a serve reads is opened through _open, which resolves its
+schema once per part-file listing, so a warm request runs no
+schema-inference job; a rewrite of the artifact changes the listing and
+invalidates the entry.
+
 Shared stages they are composed of (one implementation each):
 
   functions.ranking.topk     per-query top-k
   search.rrf_fuse            single-exchange RRF fusion of two branches
   search.doc_embeddings      the doc-embedding select of dense/,
                              dense_ivf/ and the streaming dense_log/
-  search.query_embeddings    its query-side twin
   search.dense_scores        flat cosine scoring
   similarity.assign_cells    IVF cell assignment (build + append)
   similarity.assign_residual IVFADC coarse assignment + residual
   similarity.pq_subspaces    PQ codebook grouped by subspace
   similarity.exact_rescore   phase-2 exact rescore of ANN candidates
+  localize_batch       collect the query batch once (QueryBatch)
+  _local               driver rows -> Arrow-built LocalRelation
+  _open                open an index artifact (schema cached per listing)
+  _collected           a driver-scale sidecar's rows, cached per listing
   _bm25_scores         encode queries against terms/, score postings
-  _flat_dense_scores   embed queries, dense_scores over dense/
+  _flat_dense_scores   dense_scores of the query vectors over dense/
   _ivf_dense_scores    plan probes, score the probed dense_ivf/ cells
   _plan_probes         driver-side nprobe nearest cells per query
-  _load_codebook       cached codebook sidecar read (serve + ivf_append)
+  _mock_embedding_py   driver twin of mock_embedding (both dense branches'
+                       query side and probe planning)
+  _load_codebook       codebook sidecar read (serve + ivf_append)
   _write_codebook      codebook sidecar write (both IVF builds)
   functions.publish    crash-safe bm25_state publish + replay marker
 
@@ -59,15 +78,20 @@ indexing.
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, DataType, DoubleType, LongType, StructField, StructType,
+)
 
 from semantik_spark.functions import publish
 from semantik_spark.functions.ranking import topk
 from semantik_spark.functions.vectors import cosine
 from semantik_spark.operators import bm25
 from semantik_spark.operators.search import (
-    dense_scores, doc_embeddings, query_embeddings, rrf_fuse,
+    dense_scores, doc_embeddings, rrf_fuse,
 )
 from semantik_spark.operators.similarity import (
     _codebook_df, _l2, _pq_codebook_df, assign_cells, assign_residual,
@@ -294,40 +318,142 @@ def build_index(docs: DataFrame, path: str,
     )
 
 
+#: driver-side cache of opened index artifacts, keyed by directory:
+#: (recursive part-file listing, schema, collected rows or None). Every
+#: rewrite of an artifact — overwrite, append, partitioned append, the
+#: delete cascade's rewrite — adds or replaces part files named with a
+#: fresh write-job UUID, so the listing key invalidates exactly then,
+#: whatever the filesystem's timestamp resolution. A listing that cannot
+#: be taken (no such directory, a non-local URI) is never cached.
+#: Entries are replaced whole; concurrent requests can at worst store an
+#: entry under an older listing, which the next request resolves again.
+_OPENED: dict[str, tuple[tuple, StructType, list | None]] = {}
+
+
+def _entry(spark: SparkSession, d: str) -> tuple[DataFrame, tuple]:
+    """A reader over directory ``d`` plus its (listing, schema, rows)
+    cache entry. A cached schema is handed to the reader, which then
+    only lists the files; otherwise the schema is inferred (a Spark job
+    reading a parquet footer) and cached under the current listing."""
+    import os
+
+    key = tuple(sorted(
+        os.path.relpath(os.path.join(root, f), d)
+        for root, _, files in os.walk(d) for f in files))
+    hit = _OPENED.get(d)
+    if key and hit is not None and hit[0] == key:
+        return spark.read.schema(hit[1]).parquet(d), hit
+    df = spark.read.parquet(d)
+    hit = (key, df.schema, None)
+    if key:
+        _OPENED[d] = hit
+    return df, hit
+
+
+def _open(spark: SparkSession, path: str, artifact: str) -> DataFrame:
+    """Open the index artifact ``{path}/{artifact}`` — the one path
+    every serve-side read takes (recursive listing, so the
+    ``centroid_id=`` layouts invalidate on a partitioned append too)."""
+    return _entry(spark, f"{path}/{artifact}")[0]
+
+
+def _collected(spark: SparkSession, path: str, artifact: str) -> list:
+    """The collected rows of a driver-scale sidecar (a codebook), read
+    through _open's cache and kept in its entry: a serving process holds
+    them in memory instead of paying a Spark job per request for data
+    that changes only on retrain."""
+    d = f"{path}/{artifact}"
+    df, (key, schema, rows) = _entry(spark, d)
+    if rows is None:
+        rows = df.collect()
+        if key:
+            _OPENED[d] = (key, schema, rows)
+    return rows
+
+
+_VEC = ArrayType(DoubleType())
+
+
+def _schema(qid: StructField, **cols: DataType) -> StructType:
+    """The caller's query_id field followed by ``cols``."""
+    return StructType([qid] + [StructField(n, t) for n, t in cols.items()])
+
+
+def _local(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """``rows`` as an Arrow-built LocalRelation of ``schema`` — how every
+    driver-scale input enters a serve plan. Scanning it runs no Python
+    worker and no job of its own; ``createDataFrame`` over Python rows
+    builds a Python RDD that every scan runs again."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(list(c), f.type) for c, f in zip(cols, arrow)],
+        schema=arrow), schema)
+
+
+class QueryBatch(NamedTuple):
+    """A serve request's query batch, collected once: its
+    (query_id, value) rows and their schema, with the caller's types."""
+    rows: list
+    schema: StructType
+
+    def df(self, spark: SparkSession) -> DataFrame:
+        """The batch as a LocalRelation (_local)."""
+        return _local(spark, self.rows, self.schema)
+
+    def vectors(self) -> "QueryBatch":
+        """(query_id, query_vec) of a text batch, embedded on the
+        driver by the bit-identical _mock_embedding_py twin — the one
+        query side of both dense branches."""
+        return QueryBatch(
+            [(qid, _mock_embedding_py(text)) for qid, text in self.rows],
+            _schema(self.schema["query_id"], query_vec=_VEC))
+
+
+def localize_batch(queries: DataFrame, query_id_col: str = "query_id",
+                   value_col: str = "query_text") -> QueryBatch:
+    """Collect the request's (``query_id_col``, ``value_col``) batch ONCE
+    as (query_id, ``value_col``) — the only Spark job the batch costs a
+    serve; every later read of it is a LocalRelation."""
+    b = queries.select(F.col(query_id_col).alias("query_id"), value_col)
+    return QueryBatch([tuple(r) for r in b.collect()], b.schema)
+
+
 def _bm25_scores(spark: SparkSession, path: str, queries: DataFrame,
                  postings: str = "postings") -> DataFrame:
-    """BM25 branch: (query_id, doc_id, score). Only the (tiny) query
+    """BM25 branch: (query_id, doc_id, score) for the localized
+    (query_id, query_text) batch ``queries``. Only the (tiny) query
     encoding touches the terms table; the ``postings`` scan (postings/
     or postings_pruned/) is the one big input and the per-(query,doc)
     sum the one shuffle."""
-    terms = spark.read.parquet(f"{path}/terms")
-    post = spark.read.parquet(f"{path}/{postings}")
-    return bm25.score(post, bm25.encode_queries(queries, terms))
+    return bm25.score(_open(spark, path, postings),
+                      bm25.encode_queries(queries, _open(spark, path, "terms")))
 
 
-def _flat_dense_scores(spark: SparkSession, path: str, queries: DataFrame,
-                       predicate: dict | None = None,
-                       query_id_col: str = "query_id",
-                       query_text_col: str = "query_text") -> DataFrame:
-    """Flat dense branch: embed the queries (search.query_embeddings)
-    and broadcast them against the persisted embedding table
-    (search.dense_scores). A payload
-    ``predicate`` compiles to a Column (plans/predicates.py) applied to
-    the scan BEFORE scoring, so equality/range terms on payload columns
-    reach the parquet reader as PushedFilters (plan-asserted) — ranking
-    then runs on the filtered subset only, never post-filtering a top-k
-    (which under-fills k, the classic filtered-ANN bug)."""
-    index = spark.read.parquet(f"{path}/dense")
+def _flat_dense_scores(spark: SparkSession, path: str, vecs: QueryBatch,
+                       predicate: dict | None = None) -> DataFrame:
+    """Flat dense branch: broadcast the query vectors (QueryBatch.vectors)
+    against the persisted embedding table (search.dense_scores). A
+    payload ``predicate`` compiles to a Column (plans/predicates.py)
+    applied to the scan BEFORE scoring, so equality/range terms on
+    payload columns reach the parquet reader as PushedFilters
+    (plan-asserted) — ranking then runs on the filtered subset only,
+    never post-filtering a top-k (which under-fills k, the classic
+    filtered-ANN bug)."""
+    index = _open(spark, path, "dense")
     if predicate is not None:
         index = index.where(compile_predicate(predicate))
-    return dense_scores(index, query_embeddings(queries, query_id_col, query_text_col))
+    return dense_scores(index, vecs.df(spark))
 
 
 def bm25_serve(spark: SparkSession, path: str, queries: DataFrame,
                k: int = 10) -> DataFrame:
     """BM25 top-k against the persisted index: query_id, doc_id, score,
     rank."""
-    return topk(_bm25_scores(spark, path, queries), k)
+    return topk(_bm25_scores(spark, path, localize_batch(queries).df(spark)), k)
 
 
 def dense_serve(spark: SparkSession, path: str, queries: DataFrame,
@@ -336,19 +462,21 @@ def dense_serve(spark: SparkSession, path: str, queries: DataFrame,
                 query_text_col: str = "query_text") -> DataFrame:
     """Dense top-k against the persisted embedding table, optionally
     payload-filtered by ``predicate`` (F2 ∘ W2, see _flat_dense_scores)."""
-    return topk(_flat_dense_scores(
-        spark, path, queries, predicate, query_id_col, query_text_col), k)
+    vecs = localize_batch(queries, query_id_col, query_text_col).vectors()
+    return topk(_flat_dense_scores(spark, path, vecs, predicate), k)
 
 
 def hybrid_serve(spark: SparkSession, path: str, queries: DataFrame,
                  k: int = 10, search_k: int | None = None) -> DataFrame:
     """Hybrid RRF against the persisted index — the deployed composed
     query path (service.py:73-408 minus the per-request model calls):
-    the flat dense and BM25 branches through search.rrf_fuse."""
+    the flat dense and BM25 branches through search.rrf_fuse, both
+    reading the one localized batch."""
     if search_k is None:
         search_k = max(k * 2, 20)
-    return rrf_fuse(_flat_dense_scores(spark, path, queries),
-                    _bm25_scores(spark, path, queries), k, search_k)
+    q = localize_batch(queries)
+    return rrf_fuse(_flat_dense_scores(spark, path, q.vectors()),
+                    _bm25_scores(spark, path, q.df(spark)), k, search_k)
 
 
 def build_dense_ivf(docs: DataFrame, path: str, n_centroids: int = 16,
@@ -421,15 +549,18 @@ def ivf_append(spark: SparkSession, path: str, new_docs: DataFrame,
         .partitionBy("centroid_id").parquet(f"{path}/dense_ivf")
 
 
-def _mock_embedding_py(text: str) -> list[float]:
+def _mock_embedding_py(text: str | None) -> list:
     """Driver-side twin of functions.vectors.mock_embedding — the SAME
     IEEE-double operation sequence (exact int→double, division by 2^32,
     sequential-fold L2 norm), so the values are bit-identical to the
     Column expression and driver-planned probes agree with
-    executor-scored cosines."""
+    executor-scored cosines. A NULL text gives the Column's eight NULL
+    components, which every cosine scores 0.0."""
     import hashlib
     import math
 
+    if text is None:
+        return [None] * 8
     hexs = hashlib.sha256(text.encode("utf-8")).hexdigest()
     vals = [int(hexs[i * 8:(i + 1) * 8], 16) / 4294967296.0 * 2.0 - 1.0
             for i in range(8)]
@@ -442,9 +573,12 @@ def _mock_embedding_py(text: str) -> list[float]:
 
 def _cosine_py(a: list[float], b: list[float]) -> float:
     """Driver-side twin of functions.vectors.cosine (sequential folds,
-    same association order)."""
+    same association order; 0.0 when a component is NULL, as the
+    Column's NULL norm fails its ``> 0`` test)."""
     import math
 
+    if None in a or None in b:
+        return 0.0
     dot = 0.0
     na = 0.0
     nb = 0.0
@@ -458,38 +592,14 @@ def _cosine_py(a: list[float], b: list[float]) -> float:
     return dot / nn if nn > 0 else 0.0
 
 
-#: driver-side codebook cache keyed by (dir, part-file listing) — a
-#: serving process holds the n_centroids x dim floats in memory;
-#: re-reading the parquet per request paid a full Spark job (~0.2-0.4 s
-#: locally) for data that only changes on retrain. Every rewrite
-#: (_write_codebook's overwrite) creates part files named with a fresh
-#: write-job UUID, so the listing key invalidates exactly then, whatever
-#: the filesystem's timestamp resolution; ivf_append reads through the
-#: cache and never writes the codebook.
-_CODEBOOK_CACHE: dict[str, tuple[tuple, list]] = {}
-
-
 def _load_codebook(spark: SparkSession, path: str, name: str) -> list:
     """The codebook sidecar ``{path}/{name}`` as [(cid, [floats])]
-    sorted by cid — every codebook read (dense_serve_ivf,
-    hybrid_serve_approx, ivf_append, ivfpq_serve) goes through here."""
-    import os
-
-    d = f"{path}/{name}"
-    try:
-        key = tuple(sorted(os.listdir(d)))
-    except OSError:
-        key = ()
-    hit = _CODEBOOK_CACHE.get(d)
-    if hit is not None and key and hit[0] == key:
-        return hit[1]
-    rows = sorted(
-        ((int(r["cid"]), [float(x) for x in r["cv"]])
-         for r in spark.read.parquet(d).collect()),
-        key=lambda t: t[0],
-    )
-    _CODEBOOK_CACHE[d] = (key, rows)
-    return rows
+    sorted by cid (_collected: cached per listing) — every codebook read
+    (dense_serve_ivf, hybrid_serve_approx, ivf_append, ivfpq_serve)
+    goes through here."""
+    return sorted(((int(r["cid"]), [float(x) for x in r["cv"]])
+                   for r in _collected(spark, path, name)),
+                  key=lambda t: t[0])
 
 
 def _write_codebook(spark: SparkSession, cent_rows: list, path: str,
@@ -523,31 +633,20 @@ def _plan_probes(qrows: list, cent_rows: list, nprobe: int) -> list:
     return probe_rows
 
 
-def _ivf_dense_scores(spark: SparkSession, path: str, queries: DataFrame,
-                      nprobe: int, predicate: dict | None = None,
-                      query_id_col: str = "query_id",
-                      query_text_col: str = "query_text") -> DataFrame:
+def _ivf_dense_scores(spark: SparkSession, path: str, vecs: QueryBatch,
+                      nprobe: int, predicate: dict | None = None) -> DataFrame:
     """IVF dense branch: (query_id, doc_id, score) over the probed cells
-    of dense_ivf/. Queries are embedded on the driver with the
-    bit-identical _mock_embedding_py twin and planned by _plan_probes,
-    which makes the whole serve ONE Spark job (previously a
-    codebook-scoring job and a distinct-cells collect ran before the
-    real query: 2.3s → 0.9s at sf0.1). Filtered ANN (F2 ∘ probe
-    pruning): partition pruning on centroid_id AND payload
-    PushedFilters compose on the same scan, pre-ranking — k fills from
-    eligible docs inside probed cells only."""
-    qrows = [
-        (r["query_id"], _mock_embedding_py(str(r["query_text"])))
-        for r in queries.select(F.col(query_id_col).alias("query_id"),
-                                F.col(query_text_col).alias("query_text")).collect()
-    ]
-    probe_rows = _plan_probes(qrows, _load_codebook(spark, path, "codebook"), nprobe)
-    # query_id keeps the CALLER'S type (integer-keyed batches too)
-    probes = spark.createDataFrame(
-        probe_rows,
-        f"query_id {queries.schema[query_id_col].dataType.simpleString()}, "
-        "qv array<double>, centroid_id bigint")
-    index = spark.read.parquet(f"{path}/dense_ivf").where(
+    of dense_ivf/. The driver-embedded query vectors (QueryBatch.vectors,
+    the flat branch's query side too) are planned by _plan_probes, and
+    the probes table is a LocalRelation, so the branch runs no Spark job
+    before the real query. Filtered ANN (F2 ∘ probe pruning): partition
+    pruning on centroid_id AND payload PushedFilters compose on the same
+    scan, pre-ranking — k fills from eligible docs inside probed cells
+    only."""
+    probe_rows = _plan_probes(vecs.rows, _load_codebook(spark, path, "codebook"), nprobe)
+    probes = _local(spark, probe_rows, _schema(
+        vecs.schema["query_id"], qv=_VEC, centroid_id=LongType()))
+    index = _open(spark, path, "dense_ivf").where(
         F.col("centroid_id").isin(sorted({r[2] for r in probe_rows})))
     if predicate is not None:
         index = index.where(compile_predicate(predicate))
@@ -560,10 +659,12 @@ def dense_serve_ivf(spark: SparkSession, path: str, queries: DataFrame,
                     k: int = 10, nprobe: int = 4, predicate: dict | None = None,
                     query_id_col: str = "query_id",
                     query_text_col: str = "query_text") -> DataFrame:
-    """Dense top-k against the partitioned IVF index (_ivf_dense_scores,
-    optionally payload-filtered by ``predicate``)."""
-    return topk(_ivf_dense_scores(
-        spark, path, queries, nprobe, predicate, query_id_col, query_text_col), k)
+    """Dense top-k against the partitioned IVF index (_ivf_dense_scores
+    over the localized batch's driver-embedded vectors, optionally
+    payload-filtered by ``predicate``). A NULL query text scores every
+    probed doc 0.0, as dense_serve scores every doc."""
+    vecs = localize_batch(queries, query_id_col, query_text_col).vectors()
+    return topk(_ivf_dense_scores(spark, path, vecs, nprobe, predicate), k)
 
 
 def write_ivfpq_index(corpus: DataFrame, path: str, dim: int = 64,
@@ -689,27 +790,24 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
     (test-pinned)."""
     # the PQ codebook read back as pq_codebooks rows: position == cid
     # rank, so _pq_codebook_df's cid order restores the stored positions
-    book = spark.read.parquet(f"{path}/ivfpq_pq").collect()
+    book = _collected(spark, path, "ivfpq_pq")
     m = 1 + max(int(r["s"]) for r in book)
 
-    qid_type = queries.schema[query_id_col].dataType.simpleString()
-    q_rows = [(r["query_id"], [float(x) for x in r["qv"]])
-              for r in queries.select(F.col(query_id_col).alias("query_id"),
-                                      F.col(query_vec_col).alias("qv")).collect()]
+    batch = localize_batch(queries, query_id_col, query_vec_col)
+    qid = batch.schema["query_id"]
+    q_rows = [(i, [float(x) for x in v]) for i, v in batch.rows]
     cent_rows = _load_codebook(spark, path, "ivfpq_codebook")
     cvs = dict(cent_rows)
     probe_rows = _plan_probes(q_rows, cent_rows, nprobe)
-    probes = spark.createDataFrame(
-        [r + (cvs[r[2]],) for r in probe_rows],
-        f"query_id {qid_type}, qv array<double>, centroid_id bigint, "
-        "ccv array<double>")
+    probes = _local(spark, [r + (cvs[r[2]],) for r in probe_rows],
+                    _schema(qid, qv=_VEC, centroid_id=LongType(), ccv=_VEC))
     probed_cells = sorted({r[2] for r in probe_rows})
 
     # phase 1: ADC over probed cells only (partition pruning on the
     # directory layout); recon travels as DATA via the one-row
     # broadcast codebook (literal inlining blows codegen at real sizes)
     pq_cb = F.broadcast(_pq_codebook_df(spark, book, m))
-    index = spark.read.parquet(f"{path}/ivfpq_codes").where(
+    index = _open(spark, path, "ivfpq_codes").where(
         F.col("centroid_id").isin(probed_cells)
     )
     recon = F.flatten(F.array(*[
@@ -730,12 +828,10 @@ def ivfpq_serve(spark: SparkSession, path: str, queries: DataFrame,
     # phase 2: exact rescore with the candidate ids PUSHED into the
     # full-precision scan (row-group skipping), qv rejoined broadcast
     cand_ids = sorted({int(r["vec_id"]) for r in cand_rows})
-    cand = spark.createDataFrame(
-        [(r["query_id"], int(r["vec_id"])) for r in cand_rows],
-        f"query_id {qid_type}, vec_id bigint",
-    )
-    qdf = spark.createDataFrame(q_rows, f"query_id {qid_type}, qv array<double>")
-    full = spark.read.parquet(f"{path}/ivfpq_full").where(
+    cand = _local(spark, [(r["query_id"], int(r["vec_id"])) for r in cand_rows],
+                  _schema(qid, vec_id=LongType()))
+    qdf = _local(spark, q_rows, _schema(qid, qv=_VEC))
+    full = _open(spark, path, "ivfpq_full").where(
         F.col("vec_id").isin(cand_ids)
     )
     return exact_rescore(cand, full, qdf, k)
@@ -768,9 +864,10 @@ def hybrid_serve_approx(spark: SparkSession, path: str, queries: DataFrame,
     index."""
     if search_k is None:
         search_k = max(k * 2, 20)
+    q = localize_batch(queries)
     return rrf_fuse(
-        _ivf_dense_scores(spark, path, queries, nprobe),
-        _bm25_scores(spark, path, queries, "postings_pruned"), k, search_k)
+        _ivf_dense_scores(spark, path, q.vectors(), nprobe),
+        _bm25_scores(spark, path, q.df(spark), "postings_pruned"), k, search_k)
 
 
 def delete_from_index(spark: SparkSession, path: str, deleted_docs: DataFrame,

@@ -851,19 +851,10 @@ def test_ivfpq_serve_prunes_partitions_and_pushes_rescore_ids(spark, tmp_path):
     reach the full-precision scan as PushedFilters (row-group
     skipping) — at 100 TB the serve reads nprobe/n_centroids of the
     codes and only the survivors' row groups of the vectors."""
-    import random
-
     from semantik_spark.operators import serving
 
-    rnd = random.Random(3)
-    rows = [(i, [rnd.gauss(0, 1) for _ in range(64)]) for i in range(60)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    corpus = emb.where("vec_id >= 4")
-    queries = emb.where("vec_id < 4").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
     idx = str(tmp_path / "ivfpq")
-    serving.write_ivfpq_index(corpus, idx, dim=64, n_centroids=8, m=8,
-                              pq_centroids=8, refine_iters=1)
+    queries = _ivfpq_fixture(spark, idx)
     out = serving.ivfpq_serve(spark, idx, queries, k=5, nprobe=2, rescore_k=10)
     # phase 2 plan (the returned df): full-precision scan with the
     # candidate ids pushed down (formatted explain — toString truncates
@@ -1006,18 +997,37 @@ def test_value_band_pairs_bucket_equijoin_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def _ivfpq_fixture(spark, idx: str):
+    """A 56-vector IVFADC index under ``idx`` plus the 4 held-out
+    (query_id bigint, query_vec) queries."""
+    import random
+
+    from semantik_spark.operators import serving
+
+    rnd = random.Random(3)
+    rows = [(i, [rnd.gauss(0, 1) for _ in range(64)]) for i in range(60)]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
+    serving.write_ivfpq_index(emb.where("vec_id >= 4"), idx, dim=64,
+                              n_centroids=8, m=8, pq_centroids=8,
+                              refine_iters=1)
+    return emb.where("vec_id < 4").select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec"))
+
+
 def test_serve_paths_job_count_pins(spark, tmp_path):
     """Contention-immune serve-gate regression net (VERDICT r7 items
-    2/8): the four serve paths' Spark JOB COUNTS are functions of the
+    2/8): the serve paths' Spark JOB COUNTS are functions of the
     physical plan, not of box load — wall-clock gates on a shared box
     could not adjudicate the r7 hybrid 'breach' (plan byte-identical to
     r6, >5x-contended run). A refactor that adds an exchange/action
     shows up here as a counter diff, deterministically. Bounds are the
-    measured warmed counts (bm25 9, dense 5, ivf 6, hybrid 13 — also
-    recorded per-run in BENCH_DETAIL.json queries_counters — plus
-    hybrid_approx 14 and rerank 19, so every serve_mix path of the
-    perfbench workload is pinned); pinned as <= so only regressions
-    trip, never an optimization.
+    measured warmed counts (bm25 8, dense 5, ivf 5, hybrid 11,
+    hybrid_approx 11, rerank 18 — every serve_mix path of the perfbench
+    workload — plus ivfpq_serve 10); pinned as <= so only regressions
+    trip, never an optimization. Each count is one collect of the
+    Python-built query batch (serving.localize_batch) plus the
+    execution; rerank adds its candidate checkpoint and its own batch
+    collect, ivfpq_serve its phase-1 candidate collect.
 
     MEASUREMENT CONTEXT (VERDICT r12 item 3): warmed-in-process — each
     path executes once unmeasured immediately before the pinned run in
@@ -1034,21 +1044,25 @@ def test_serve_paths_job_count_pins(spark, tmp_path):
     serving.build_index(docs, idx)
     serving.build_sparse_pruned(spark, idx)
     serving.build_dense_ivf(docs, idx, n_centroids=4)
+    pq = str(tmp_path / "ivfpq")
+    vq = _ivfpq_fixture(spark, pq)
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     paths = [
-        ("bm25_serve", 9, lambda: serving.bm25_serve(spark, idx, qdf, k=5)),
+        ("bm25_serve", 8, lambda: serving.bm25_serve(spark, idx, qdf, k=5)),
         ("dense_serve", 5, lambda: serving.dense_serve(spark, idx, qdf, k=5)),
-        ("dense_ivf_serve", 6,
+        ("dense_ivf_serve", 5,
          lambda: serving.dense_serve_ivf(spark, idx, qdf, k=5, nprobe=2)),
-        ("hybrid_serve", 13,
+        ("hybrid_serve", 11,
          lambda: serving.hybrid_serve(spark, idx, qdf, k=5, search_k=10)),
-        ("hybrid_serve_approx", 14,
+        ("hybrid_serve_approx", 11,
          lambda: serving.hybrid_serve_approx(spark, idx, qdf, k=5, nprobe=2)),
-        ("rerank", 19,
+        ("rerank", 18,
          lambda: rerank.rerank(
              serving.hybrid_serve(spark, idx, qdf, k=rerank.candidate_k(5)),
              qdf, docs, k=5)),
+        ("ivfpq_serve", 10,
+         lambda: serving.ivfpq_serve(spark, pq, vq, k=5, nprobe=2, rescore_k=10)),
     ]
     for name, bound, fn in paths:
         fn().count()  # warm: AQE stats / broadcast thresholds settle
@@ -1059,6 +1073,75 @@ def test_serve_paths_job_count_pins(spark, tmp_path):
             sc.setJobGroup(None, None)
         jobs = len(tracker.getJobIdsForGroup(f"gate_{name}"))
         assert 0 < jobs <= bound, (name, jobs, bound)
+
+
+def _python_rdd_leaves(df) -> list[str]:
+    """The leaves of ``df``'s optimized plan that scan a Python RDD
+    (``createDataFrame`` over Python rows, or its silent non-Arrow
+    fallback)."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    out = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "LogicalRDD" \
+                and "PythonRDD" in leaf.rdd().toDebugString():
+            out.append(leaf.toString())
+    return out
+
+
+def test_serve_paths_read_the_query_batch_as_a_local_relation(spark, tmp_path):
+    """Every serve path collects its query batch once and reads it, and
+    everything derived from it on the driver, as an Arrow-built
+    LocalRelation: the executed plan has no Python-RDD leaf even though
+    the caller's batch is one (a silent Arrow fallback would bring it
+    back). An integer-keyed batch keeps the caller's query_id type, and
+    an empty batch returns zero rows on every path."""
+    from pyspark.sql.types import IntegerType
+
+    from semantik_spark.operators import rerank, serving
+
+    docs = _mk_docs(spark, 120)
+    idx = str(tmp_path / "idx")
+    serving.build_index(docs, idx)
+    serving.build_sparse_pruned(spark, idx)
+    serving.build_dense_ivf(docs, idx, n_centroids=4)
+    pq = str(tmp_path / "ivfpq")
+    vecs = _ivfpq_fixture(spark, pq).collect()
+
+    def text_paths(q):
+        return {
+            "bm25": serving.bm25_serve(spark, idx, q, k=5),
+            "dense": serving.dense_serve(spark, idx, q, k=5),
+            "ivf": serving.dense_serve_ivf(spark, idx, q, k=5, nprobe=2),
+            "hybrid": serving.hybrid_serve(spark, idx, q, k=5),
+            "hybrid_approx": serving.hybrid_serve_approx(spark, idx, q, k=5,
+                                                         nprobe=2),
+            "rerank": rerank.rerank(
+                serving.hybrid_serve(spark, idx, q, k=rerank.candidate_k(5)),
+                q, docs, k=5),
+        }
+
+    def ivfpq(rows):
+        q = spark.createDataFrame(rows, "query_id int, query_vec array<double>")
+        assert _python_rdd_leaves(q)  # the caller's batch is a Python RDD
+        return serving.ivfpq_serve(spark, pq, q, k=5, nprobe=2, rescore_k=10)
+
+    batch = [(1, "merge stream"), (2, "filter scan token")]
+    q = spark.createDataFrame(batch, "query_id int, query_text string")
+    assert _python_rdd_leaves(q)
+    served = dict(text_paths(q),
+                  ivfpq=ivfpq([(int(r["query_id"]), r["query_vec"]) for r in vecs]))
+    for name, out in served.items():
+        assert _python_rdd_leaves(out) == [], name
+        assert "LocalTableScan" in _plan(out), name
+        assert out.schema["query_id"].dataType == IntegerType(), name
+        want = {0, 1, 2, 3} if name == "ivfpq" else {1, 2}
+        assert {r["query_id"] for r in out.collect()} == want, name
+
+    empty = spark.createDataFrame([], "query_id int, query_text string")
+    served = dict(text_paths(empty), ivfpq=ivfpq([]))
+    for name, out in served.items():
+        assert out.collect() == [], name
 
 
 def test_interval_overlap_join_bucket_blocked(spark):

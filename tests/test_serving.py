@@ -430,7 +430,7 @@ def test_driver_side_twins_are_bit_identical_to_columns(spark):
     doubles to the mock_embedding / cosine Column expressions — a
     single ULP of drift and the driver picks different probe cells
     than the executors would score. Pinned over a diverse string
-    sample (unicode, whitespace, long, numeric) with exact ==, no
+    sample (unicode, whitespace, long, numeric, NULL) with exact ==, no
     tolerance."""
     from pyspark.sql import functions as F
 
@@ -440,7 +440,7 @@ def test_driver_side_twins_are_bit_identical_to_columns(spark):
         _mock_embedding_py,
     )
 
-    texts = (["", " ", "a", "hello world", "Hello, World!", "émigré café",
+    texts = ([None, "", " ", "a", "hello world", "Hello, World!", "émigré café",
               "日本語のテキスト", "x" * 5000, "123.456e-7", "\ttab\nnewline",
               "the quick brown fox jumps over the lazy dog"]
              + [f"doc-{i}-{i * 31 % 97}" for i in range(50)])
@@ -516,6 +516,83 @@ def test_ivf_serve_accepts_integer_query_ids(spark, tmp_path):
                               ["query_id", "query_text"])
     rows = dense_serve_ivf(spark, idx, q, k=3).collect()
     assert rows and all(r["query_id"] == 7 for r in rows)
+
+
+def test_null_query_text_scores_zero_on_flat_and_ivf_paths(spark, tmp_path):
+    """A NULL query text embeds to the Column mock_embedding's eight
+    NULL components, which every cosine scores 0.0: with every cell
+    probed, dense_serve_ivf returns what dense_serve and the
+    oracle-checked mock_dense_search return — the first doc ids at
+    score 0.0, never the neighbours of the string "None"."""
+    from semantik_spark.operators.serving import (
+        build_dense_ivf, build_index, dense_serve, dense_serve_ivf,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"document about topic {i % 5} item {i}") for i in range(40)],
+        ["doc_id", "text"])
+    idx = str(tmp_path / "idx")
+    build_index(docs, idx)
+    build_dense_ivf(docs, idx, n_centroids=4)
+    q = spark.createDataFrame([("qn", None), ("qa", "topic 3 item")],
+                              "query_id string, query_text string")
+    rows = lambda df: sorted(  # noqa: E731
+        (r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in df.collect())
+    flat = rows(dense_serve(spark, idx, q, k=3))
+    assert [r for r in flat if r[0] == "qn"] == [
+        ("qn", 1, 0, 0.0), ("qn", 2, 1, 0.0), ("qn", 3, 2, 0.0)]
+    assert rows(dense_serve_ivf(spark, idx, q, k=3, nprobe=4)) == flat
+    assert rows(search.mock_dense_search(docs, q, k=3)) == flat
+
+
+def test_open_cache_follows_every_index_write(spark, tmp_path):
+    """Artifacts opened through serving._open (schema cached per
+    part-file listing) show every later write in the next serve,
+    exactly as a fresh spark.read of the same paths does: appended rows
+    (merge_dense_append, ivf_append), erased rows (delete_from_index)
+    and a new payload column from a rebuild (build_index with
+    payload_cols, read by dense_serve(predicate=...))."""
+    from semantik_spark.operators.serving import (
+        _OPENED, _open, build_dense_ivf, build_index, delete_from_index,
+        dense_serve, dense_serve_ivf, ivf_append, merge_dense_append,
+    )
+
+    docs = spark.range(50).selectExpr(
+        "id as doc_id", "concat('alpha beta doc ', id) as text",
+        "case when id % 3 = 0 then 'en' else 'de' end as lang")
+    base, delta = docs.where("doc_id < 40"), docs.where("doc_id >= 40")
+    idx = str(tmp_path / "idx")
+    build_index(base.drop("lang"), idx)
+    build_dense_ivf(base.drop("lang"), idx, n_centroids=4)
+    q = spark.createDataFrame([("q1", "alpha beta")], ["query_id", "query_text"])
+
+    def served() -> tuple[set, set]:
+        return ({r["doc_id"] for r in dense_serve(spark, idx, q, k=100).collect()},
+                {r["doc_id"] for r in
+                 dense_serve_ivf(spark, idx, q, k=100, nprobe=4).collect()})
+
+    def fresh() -> tuple[set, set]:
+        return tuple({r["doc_id"] for r in spark.read.parquet(f"{idx}/{sub}").collect()}
+                     for sub in ("dense", "dense_ivf"))
+
+    assert served() == fresh() == (set(range(40)),) * 2
+    assert f"{idx}/dense" in _OPENED and f"{idx}/dense_ivf" in _OPENED
+
+    merge_dense_append(delta.drop("lang"), idx)
+    ivf_append(spark, idx, delta.drop("lang"))
+    assert served() == fresh() == (set(range(50)),) * 2
+
+    gone = docs.where("doc_id in (0, 41)").select("doc_id", "text")
+    delete_from_index(spark, idx, gone)
+    assert served() == fresh() == (set(range(50)) - {0, 41},) * 2
+
+    build_index(docs, idx, payload_cols=("lang",))
+    assert _open(spark, idx, "dense").columns == \
+        spark.read.parquet(f"{idx}/dense").columns
+    hits = dense_serve(spark, idx, q, k=100, predicate={"lang": "en"}).collect()
+    assert {r["doc_id"] for r in hits} == {
+        r["doc_id"] for r in spark.read.parquet(f"{idx}/dense")
+        .where("lang = 'en'").collect()} == set(range(0, 50, 3))
 
 
 def test_merge_sparse_append_replay_after_crash_before_swap(spark, tmp_path):
